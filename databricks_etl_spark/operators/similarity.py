@@ -392,7 +392,9 @@ def _pair_dot(dim: int | None) -> F.Column:
     ((0.0 + x1·y1) + x2·y2) + …, the flat form (x1·y1 + x2·y2) + … and
     0.0 + t ≡ t in IEEE doubles, so every partial sum matches in order
     and value (the r16 JL-kernel argument). Without ``dim`` the
-    general fold stays (ragged arrays keep their NULL semantics)."""
+    general fold stays (ragged arrays keep their NULL semantics). The
+    caller checks every vector's width against ``dim`` — the flat form
+    would otherwise silently drop the elements past ``dim``."""
     if dim is None:
         return dot(F.col("__va"), F.col("__vb"))
     terms = " + ".join(
@@ -435,6 +437,21 @@ def semdedup_prune(
     failure mode q272's hot-bucket cap guards in the MinHash lane).
     """
     cells = assign_cells(vectors, centroids, id_col=id_col, vec_col=vec_col)
+    if dim is not None:
+        # _pair_dot's width contract, checked once per vector before
+        # the cell self-join multiplies rows
+        width = F.size(vec_col)
+        cells = cells.withColumn(
+            vec_col,
+            F.when(width == dim, F.col(vec_col)).otherwise(
+                F.raise_error(
+                    F.format_string(
+                        f"{vec_col} has %d elements, dim={dim} was declared",
+                        width,
+                    )
+                )
+            ),
+        )
     # LEFT join: a vector with no quality row must still appear in the
     # output (the operator's one-row-per-vector contract); its NULL
     # score is coalesced to -inf for the dominance order only.

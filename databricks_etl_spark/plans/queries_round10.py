@@ -1673,18 +1673,18 @@ _Q352_DEPTHS = (10, 25, 50, 100, 200)  # PQ candidate pool sizes swept
 
 
 def _q352_oracle() -> str:
-    from databricks_etl_spark.plans.queries_round7 import _Q285_DOT
     from databricks_etl_spark.plans.queries_round8 import _q316_chain
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     sim_exact = (
-        f"round({_Q285_DOT.format(a='q.__qe', b='c.embedding')}"
-        f" / (sqrt({_Q285_DOT.format(a='q.__qe', b='q.__qe')})"
-        f" * sqrt({_Q285_DOT.format(a='c.embedding', b='c.embedding')})), 6)"
+        f"round({_dot_sql('q.__qe', 'c.embedding')}"
+        f" / (sqrt({_dot_sql('q.__qe', 'q.__qe')})"
+        f" * sqrt({_dot_sql('c.embedding', 'c.embedding')})), 6)"
     )
     sim_pq = (
-        f"round({_Q285_DOT.format(a='q.__qe', b='r.rv')}"
-        f" / (sqrt({_Q285_DOT.format(a='q.__qe', b='q.__qe')})"
-        f" * sqrt({_Q285_DOT.format(a='r.rv', b='r.rv')})), 6)"
+        f"round({_dot_sql('q.__qe', 'r.rv')}"
+        f" / (sqrt({_dot_sql('q.__qe', 'q.__qe')})"
+        f" * sqrt({_dot_sql('r.rv', 'r.rv')})), 6)"
     )
     depths = ", ".join(str(m) for m in _Q352_DEPTHS)
     return f"""
@@ -2837,21 +2837,21 @@ def _q362_oracle() -> str:
     from databricks_etl_spark.plans.queries_round7 import (
         _Q285_CENTS,
         _Q285_D2,
-        _Q285_DOT,
     )
     from databricks_etl_spark.plans.queries_round8 import _q316_chain
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     vals = ", ".join(f"({j}, {c})" for j, c in enumerate(_Q285_CENTS))
     qd2 = _Q285_D2.replace("embedding", "__qe")
     sim_exact = (
-        f"round({_Q285_DOT.format(a='q.__qe', b='c.embedding')}"
-        f" / (sqrt({_Q285_DOT.format(a='q.__qe', b='q.__qe')})"
-        f" * sqrt({_Q285_DOT.format(a='c.embedding', b='c.embedding')})), 6)"
+        f"round({_dot_sql('q.__qe', 'c.embedding')}"
+        f" / (sqrt({_dot_sql('q.__qe', 'q.__qe')})"
+        f" * sqrt({_dot_sql('c.embedding', 'c.embedding')})), 6)"
     )
     sim_pq = (
-        f"round({_Q285_DOT.format(a='q.__qe', b='r.rv')}"
-        f" / (sqrt({_Q285_DOT.format(a='q.__qe', b='q.__qe')})"
-        f" * sqrt({_Q285_DOT.format(a='r.rv', b='r.rv')})), 6)"
+        f"round({_dot_sql('q.__qe', 'r.rv')}"
+        f" / (sqrt({_dot_sql('q.__qe', 'q.__qe')})"
+        f" * sqrt({_dot_sql('r.rv', 'r.rv')})), 6)"
     )
     return f"""
         WITH {_q316_chain()},

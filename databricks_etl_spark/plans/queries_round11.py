@@ -3847,16 +3847,16 @@ def q412_jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q413_oracle() -> str:
-    from databricks_etl_spark.plans.queries_round7 import _Q285_DOT
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     proj = _q412_proj_sql()
     doty = lambda a, b: " + ".join(  # noqa: E731
         f"{a}.y[{j + 1}] * {b}.y[{j + 1}]" for j in range(_Q412_K)
     )
     sim64 = (
-        f"round({_Q285_DOT.format(a='q.embedding', b='c.embedding')}"
-        f" / (sqrt({_Q285_DOT.format(a='q.embedding', b='q.embedding')})"
-        f" * sqrt({_Q285_DOT.format(a='c.embedding', b='c.embedding')}))"
+        f"round({_dot_sql('q.embedding', 'c.embedding')}"
+        f" / (sqrt({_dot_sql('q.embedding', 'q.embedding')})"
+        f" * sqrt({_dot_sql('c.embedding', 'c.embedding')}))"
         f", 6)"
     )
     sim16 = (

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from databricks_etl_spark.operators.quantile_bucket import exact_ntile
 from databricks_etl_spark.plans.registry import query
 from databricks_etl_spark.sources.readers import read_table
+from databricks_etl_spark.streaming import sinks
 
 # q434 embeds q170's oracle SQL via the registry, so a DIRECT import of
 # this module must register queries_olap first (round-11 precedent)
@@ -1160,6 +1161,10 @@ def _version_log_sql(p: str = "") -> str:
             UNION ALL
             SELECT 4, 'remove', file_id, rws FROM {p}files WHERE rk = 3
         )"""
+
+
+# the action rows _version_log yields, as landed by the CDC sinks
+_ACTIONS = "version int, action string, file_id long, rws long"
 
 
 def _version_log(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2362,47 +2367,22 @@ def q453_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (file-grain metadata); the drain is one anti-join over the
     accumulated log — the exact cost profile of a table-format
     checkpoint build."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     log = _version_log(spark, sf_dir)
-    partials_path = scratch_dir("cdc_partials_", key=sf_dir)
-    shutil.rmtree(partials_path, ignore_errors=True)
-    schema = "version int, action string, file_id long, rws long, __epoch int"
-    (
-        spark.createDataFrame([], schema)
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    partials_path = fresh_scratch_dir("cdc_partials_", key=sf_dir)
+    sinks.seed(spark, partials_path, _ACTIONS)
     # versions arrive as commit-grain micro-batches: epoch e delivers
     # version e+1's actions (a deterministic stand-in for the stream
     # source — the ingest/drain machinery is the real surface)
-    ingest = _make_cdc_epoch(partials_path)
+    ingest = sinks.epoch_idempotent_sink(partials_path)
     for epoch, version in enumerate(_Q443_VERSIONS):
         ingest(log.filter(F.col("version") == version), epoch)
     return _drain_cdc_live(spark, partials_path)
 
 
-def _make_cdc_epoch(partials_path: str):
-    """Epoch-idempotent CDC sink (q447's discipline for action rows)."""
-
-    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
-
-    return ingest
-
-
 def _drain_cdc_live(spark: SparkSession, partials_path: str) -> DataFrame:
-    schema = "version int, action string, file_id long, rws long, __epoch int"
-    acts = spark.read.schema(schema).parquet(partials_path)
+    acts = sinks.landed(spark, partials_path, _ACTIONS)
     adds = acts.filter(F.col("action") == "add").select("file_id", "rws")
     rems = acts.filter(F.col("action") == "remove").select("file_id")
     return adds.join(rems, "file_id", "left_anti").orderBy("file_id")
@@ -3446,13 +3426,10 @@ def q460_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the audit is one grouped pass over the merged read;
     evolution cost at 100 TB is zero rewrite (old files are never
     touched — the reader reconciles), which is the point."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     orders = read_table(spark, sf_dir, "orders")
-    path = scratch_dir("schema_evo_", key=sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_scratch_dir("schema_evo_", key=sf_dir)
     (
         orders.filter(F.col("o_orderkey") % 3 != 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3511,13 +3488,10 @@ def _q461_oracle() -> str:
 def _q461_wap(
     spark: SparkSession, sf_dir: str, min_rows: int = _Q461_MIN_ROWS
 ) -> DataFrame:
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     orders = read_table(spark, sf_dir, "orders")
-    root = scratch_dir("wap_", key=f"{sf_dir}|{min_rows}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("wap_", key=f"{sf_dir}|{min_rows}")
     base_dir, stage_dir = f"{root}/published", f"{root}/staged"
     orders.filter(F.col("o_orderkey") % 10 != 9).write.mode(
         "overwrite"

@@ -21,9 +21,11 @@ from pyspark.sql import functions as F
 from databricks_etl_spark.operators.quantile_bucket import exact_ntile
 from databricks_etl_spark.plans.registry import query
 from databricks_etl_spark.sources.readers import read_table
+from databricks_etl_spark.streaming import sinks
 
 # shared kernels from the round-11b table-format / optimizer families
 from databricks_etl_spark.plans.queries_round11b import (  # noqa: F401
+    _ACTIONS,
     _Q443_VERSIONS,
     _q434_frac_sql,
     _version_log,
@@ -367,29 +369,13 @@ def _q463_oracle() -> str:
     return QUERIES["q443_time_travel_reads"].oracle
 
 
-def _make_q463_epoch(partials_path: str):
-    """Epoch-idempotent action sink (q453's discipline verbatim)."""
-
-    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
-
-    return ingest
-
-
 def _drain_q463_asof(
     spark: SparkSession, partials_path: str, sf_dir: str
 ) -> DataFrame:
     """Accumulated action partials → q443's full as-of answer: live
     sets for EVERY version (broadcast version grid + anti-join), then
     the per-version rollup with the delta against the current table."""
-    schema = "version int, action string, file_id long, rws long, __epoch int"
-    acts = spark.read.schema(schema).parquet(partials_path)
+    acts = sinks.landed(spark, partials_path, _ACTIONS)
     vg = spark.createDataFrame(
         [(v,) for v in _Q443_VERSIONS], "version_at int"
     )
@@ -450,13 +436,10 @@ def q463_streaming_asof_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per epoch the sink writes one commit's file-grain
     actions; the drain is |versions| broadcast-grid anti-joins over
     MB-scale log metadata — no data re-scan per version."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     log = _version_log(spark, sf_dir)
-    root = scratch_dir("asof_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("asof_", key=sf_dir)
     stage_path = f"{root}/staged"
     partials_path = f"{root}/partials"
     # one file per commit: the staged stand-in for the commit stream
@@ -465,13 +448,7 @@ def q463_streaming_asof_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("version")
         .parquet(stage_path)
     )
-    schema = "version int, action string, file_id long, rws long, __epoch int"
-    (
-        spark.createDataFrame([], schema)
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    sinks.seed(spark, partials_path, _ACTIONS)
     stream = (
         spark.readStream.schema(
             "action string, file_id long, rws long, version int"
@@ -479,13 +456,13 @@ def q463_streaming_asof_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage_path)
     )
-    q = (
-        stream.writeStream.foreachBatch(_make_q463_epoch(partials_path))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
+    sinks.run_available_now(
+        stream,
+        sinks.epoch_idempotent_sink(partials_path),
+        sf_dir,
+        ("orders",),
+        checkpoint=f"{root}/ckpt",
     )
-    q.awaitTermination()
     return _drain_q463_asof(spark, partials_path, sf_dir)
 
 
@@ -541,13 +518,10 @@ def q464_schema_widening_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     never touched — the scan up-casts); the audit is one grouped pass
     over the merged read plus a key-equi join back to the source for
     the precision count."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     orders = read_table(spark, sf_dir, "orders")
-    path = scratch_dir("schema_widen_", key=sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_scratch_dir("schema_widen_", key=sf_dir)
     (
         orders.filter(F.col("o_orderkey") % 3 != 0)
         .select(
@@ -641,13 +615,10 @@ def q465_rename_vs_add_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one grouped pass over the merged read + two
     distinct-set comparisons on the (tiny) value domains."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     orders = read_table(spark, sf_dir, "orders")
-    path = scratch_dir("schema_rename_", key=sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_scratch_dir("schema_rename_", key=sf_dir)
     (
         orders.filter(F.col("o_orderkey") % 3 != 0)
         .select("o_orderkey", "o_orderpriority")
@@ -1846,6 +1817,12 @@ def _q474_oracle() -> str:
     return QUERIES["q471_incremental_stats_maintenance"].oracle
 
 
+_Q474_PARTIAL = (
+    "column_name string, n long, mn double, mx double,"
+    " s decimal(38,6), nd long"
+)
+
+
 def _make_q474_epoch(partials_path: str):
     """Epoch-idempotent per-column stats sink: each epoch lands its
     generation's 1-row aggregate per column (stats metadata, not
@@ -1868,13 +1845,7 @@ def _make_q474_epoch(partials_path: str):
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        (
-            out.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
+        sinks.land(out, epoch_id, partials_path)
 
     return ingest
 
@@ -1882,11 +1853,7 @@ def _make_q474_epoch(partials_path: str):
 def _drain_q474_stats(
     spark: SparkSession, partials_path: str, sf_dir: str
 ) -> DataFrame:
-    schema = (
-        "column_name string, n long, mn double, mx double,"
-        " s decimal(38,6), nd long, __epoch int"
-    )
-    parts = spark.read.schema(schema).parquet(partials_path)
+    parts = sinks.landed(spark, partials_path, _Q474_PARTIAL)
     merged = parts.groupBy("column_name").agg(
         F.sum("n").cast("long").alias("n_rows"),
         F.min("mn").alias("min_v"),
@@ -1928,23 +1895,11 @@ def q474_streaming_stats_maintenance(
 
     Scale shape: per-epoch cost is ONE aggregate over the arriving
     batch; the drain folds |epochs| 1-row frames."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     orders = read_table(spark, sf_dir, "orders")
-    partials_path = scratch_dir("stats_partials_", key=sf_dir)
-    shutil.rmtree(partials_path, ignore_errors=True)
-    schema = (
-        "column_name string, n long, mn double, mx double,"
-        " s decimal(38,6), nd long, __epoch int"
-    )
-    (
-        spark.createDataFrame([], schema)
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    partials_path = fresh_scratch_dir("stats_partials_", key=sf_dir)
+    sinks.seed(spark, partials_path, _Q474_PARTIAL)
     ingest = _make_q474_epoch(partials_path)
     ingest(orders.filter(F.col("o_orderkey") % 5 != 2), 0)
     ingest(orders.filter(F.col("o_orderkey") % 5 == 2), 1)
@@ -3027,27 +2982,11 @@ def _q483_oracle() -> str:
     return QUERIES["q479_erasure_compliance_audit"].oracle
 
 
-def _make_q483_epoch(partials_path: str):
-    """Epoch-idempotent erasure-request sink."""
-
-    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
-
-    return ingest
-
-
 def _drain_q483_audit(
     spark: SparkSession, partials_path: str, sf_dir: str
 ) -> DataFrame:
     req = (
-        spark.read.schema("c_custkey long, __epoch int")
-        .parquet(partials_path)
+        sinks.landed(spark, partials_path, "c_custkey long")
         .select("c_custkey")
         .distinct()
     )
@@ -3118,14 +3057,11 @@ def q483_streaming_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per epoch the sink writes that batch's request keys
     (tiny); the drain is q479's broadcast anti-join cascade."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     cust = read_table(spark, sf_dir, "customer")
     req = cust.filter(F.col("c_custkey") % 53 == 7).select("c_custkey")
-    root = scratch_dir("erasure_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("erasure_", key=sf_dir)
     stage_path = f"{root}/staged"
     partials_path = f"{root}/partials"
     # two request batches split by key parity, plus an overlapping
@@ -3139,26 +3075,19 @@ def q483_streaming_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         req.filter(F.col("c_custkey") % 4 == 0).withColumn("b", F.lit(1))
     )
     batches.repartition(1, "b").write.partitionBy("b").parquet(stage_path)
-    (
-        spark.createDataFrame([], "c_custkey long, __epoch int")
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    sinks.seed(spark, partials_path, "c_custkey long")
     stream = (
         spark.readStream.schema("c_custkey long, b int")
         .option("maxFilesPerTrigger", 1)
         .parquet(stage_path)
     )
-    ingest = _make_q483_epoch(partials_path)
-    q = (
-        stream.select("c_custkey")
-        .writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
+    sinks.run_available_now(
+        stream.select("c_custkey"),
+        sinks.epoch_idempotent_sink(partials_path),
+        sf_dir,
+        ("customer",),
+        checkpoint=f"{root}/ckpt",
     )
-    q.awaitTermination()
     return _drain_q483_audit(spark, partials_path, sf_dir)
 
 # ---------------------------------------------------------------------------
@@ -3871,15 +3800,12 @@ def q491_corrupt_record_quarantine(
 
     Scale shape: one line-grain map pass at read (the parser itself);
     the audit is one fused aggregate."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
-    path = scratch_dir("quarantine_", key=sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_scratch_dir("quarantine_", key=sf_dir)
     lines = orders.select(
         F.when(
             F.col("o_orderkey") % 100 == 13,
@@ -4182,13 +4108,10 @@ def q494_streaming_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-epoch cost is one map + 1-row aggregate over the
     arriving batch; the drain folds |epochs| 1-row partials."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     orders = read_table(spark, sf_dir, "orders")
-    root = scratch_dir("fingerprint_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("fingerprint_", key=sf_dir)
     stage_path, partials_path = f"{root}/staged", f"{root}/partials"
     # staging is the test harness's stream stand-in; the fold is
     # slicing-invariant, so the write stays PARALLEL (any file count
@@ -4203,28 +4126,18 @@ def q494_streaming_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("g")
         .parquet(stage_path)
     )
-    (
-        spark.createDataFrame(
-            [], "n long, s decimal(38,0), __epoch int"
-        )
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    sinks.seed(spark, partials_path, "n long, s decimal(38,0)")
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+        sinks.land(
             batch_df.agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum(
                     _q492_hash_col(_q492_row_col()).cast("decimal(38,0)")
                 ).alias("s"),
-            )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
+            ),
+            epoch_id,
+            partials_path,
         )
 
     stream = (
@@ -4235,16 +4148,10 @@ def q494_streaming_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage_path)
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
+    sinks.run_available_now(
+        stream, ingest, sf_dir, ("orders",), checkpoint=f"{root}/ckpt"
     )
-    q.awaitTermination()
-    parts = spark.read.schema(
-        "n long, s decimal(38,0), __epoch int"
-    ).parquet(partials_path)
+    parts = sinks.landed(spark, partials_path, "n long, s decimal(38,0)")
     return parts.agg(
         F.sum("n").cast("long").alias("n_rows"),
         F.sum("s").cast("string").alias("content_fingerprint"),
@@ -4876,10 +4783,12 @@ def _q501_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q501_DELTA_SCHEMA = (
+_Q501_PURCHASES = "user_id long, ts timestamp_ntz, value double, event_id long"
+_Q501_DELTA = (
     "user_id long, valid_from timestamp_ntz, acct_value double,"
-    " clicks long, mult int, __epoch int"
+    " clicks long, mult int"
 )
+_Q501_DELTA_SCHEMA = sinks.epoch_schema(_Q501_DELTA)
 
 
 def _make_q501_epoch(
@@ -4894,11 +4803,7 @@ def _make_q501_epoch(
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
         prior = (
-            spark.read.schema(
-                "user_id long, ts timestamp_ntz, value double,"
-                " event_id long, __epoch int"
-            )
-            .parquet(f"{partials_path}/purchases")
+            sinks.landed(spark, f"{partials_path}/purchases", _Q501_PURCHASES)
             .filter(F.col("__epoch") < e)
             .drop("__epoch")
         )
@@ -4911,29 +4816,15 @@ def _make_q501_epoch(
             .unionByName(
                 old.exceptAll(new).select(*key, F.lit(-1).alias("mult"))
             )
-            .withColumn("__epoch", F.lit(e))
         )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{partials_path}/attrib")
-        )
-        (
-            batch.withColumn("__epoch", F.lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{partials_path}/purchases")
-        )
+        sinks.land(delta, e, f"{partials_path}/attrib")
+        sinks.land(batch, e, f"{partials_path}/purchases")
 
     return ingest
 
 
 def _drain_q501(spark: SparkSession, partials_path: str) -> DataFrame:
-    deltas = spark.read.schema(_Q501_DELTA_SCHEMA).parquet(
-        f"{partials_path}/attrib"
-    )
+    deltas = sinks.landed(spark, f"{partials_path}/attrib", _Q501_DELTA)
     net = (
         deltas.groupBy("user_id", "valid_from", "acct_value")
         .agg(F.sum(F.col("mult") * F.col("clicks")).alias("net_clicks"))
@@ -4977,34 +4868,17 @@ def q501_streaming_pit_attribution(
     in the batch in production (here the full prior set for
     simplicity of proof — the delta emission, which is the hard part,
     is identical); the drain is one grouped multiplicity fold."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     e = read_table(spark, sf_dir, "events")
     clicks = _q501_clicks(spark, sf_dir).localCheckpoint(eager=False)
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value", "event_id"
     )
-    root = scratch_dir("pit_attrib_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("pit_attrib_", key=sf_dir)
     partials_path = f"{root}/partials"
-    (
-        spark.createDataFrame(
-            [],
-            "user_id long, ts timestamp_ntz, value double,"
-            " event_id long, __epoch int",
-        )
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(f"{partials_path}/purchases")
-    )
-    (
-        spark.createDataFrame([], _Q501_DELTA_SCHEMA)
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(f"{partials_path}/attrib")
-    )
+    sinks.seed(spark, f"{partials_path}/purchases", _Q501_PURCHASES)
+    sinks.seed(spark, f"{partials_path}/attrib", _Q501_DELTA)
     ingest = _make_q501_epoch(spark, partials_path, clicks)
     # event-id parity slices: epoch 1 delivers versions that land
     # BETWEEN epoch-0 versions — interval splits everywhere

@@ -20,18 +20,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_etl_spark.operators import graph_ann as GA
+from databricks_etl_spark.plans.queries_similarity import _dot_sql
 from databricks_etl_spark.plans.registry import query
 from databricks_etl_spark.sources.readers import read_table
-
-_DOT = (
-    "list_sum(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-)
-
-
-def _dot_sql(a: str, b: str) -> str:
-    return _DOT.format(a=a, b=b)
-
+from databricks_etl_spark.streaming import sinks
 
 _Q506_M = 8  # graph out-degree
 
@@ -546,10 +538,8 @@ def q510_recluster_plan_execution(
     one range-partitioned sort; the depth audit is a |files|² zone
     self-join on metadata.  Nothing global is re-sorted — that is
     the entire point of executing the INCREMENTAL plan."""
-    import shutil
-
     from databricks_etl_spark.operators.quantile_bucket import exact_ntile
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     li = read_table(spark, sf_dir, "lineitem").select(
         F.datediff(
@@ -578,8 +568,7 @@ def q510_recluster_plan_execution(
         ["l_orderkey", "l_linenumber"], _Q510_APPEND_FILES,
         out_col="fid0",
     ).select(*cols, (F.lit(1000) + F.col("fid0")).alias("fid"))
-    root = scratch_dir("recluster_exec_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("recluster_exec_", key=sf_dir)
     (
         basef.unionByName(appf)
         .write.mode("overwrite")
@@ -760,10 +749,11 @@ def _q511_attrib(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     )
 
 
-_Q511_DELTA_SCHEMA = (
-    "user_id long, purchase_id long, click_id long, share double,"
-    " mult int, __epoch int"
+_Q511_CLICKS = "c_user long, click_id long, c_ts timestamp_ntz"
+_Q511_DELTA = (
+    "user_id long, purchase_id long, click_id long, share double, mult int"
 )
+_Q511_DELTA_SCHEMA = sinks.epoch_schema(_Q511_DELTA)
 
 
 def _make_q511_epoch(
@@ -781,11 +771,7 @@ def _make_q511_epoch(
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
         prior = (
-            spark.read.schema(
-                "c_user long, click_id long, c_ts timestamp_ntz,"
-                " __epoch int"
-            )
-            .parquet(f"{partials_path}/clicks")
+            sinks.landed(spark, f"{partials_path}/clicks", _Q511_CLICKS)
             .filter(F.col("__epoch") < e)
             .drop("__epoch")
         )
@@ -798,21 +784,9 @@ def _make_q511_epoch(
             .unionByName(
                 old.exceptAll(new).select(*key, F.lit(-1).alias("mult"))
             )
-            .withColumn("__epoch", F.lit(e))
         )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{partials_path}/attrib")
-        )
-        (
-            batch.withColumn("__epoch", F.lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{partials_path}/clicks")
-        )
+        sinks.land(delta, e, f"{partials_path}/attrib")
+        sinks.land(batch, e, f"{partials_path}/clicks")
 
     return ingest
 
@@ -821,9 +795,7 @@ def _drain_q511(spark: SparkSession, partials_path: str) -> DataFrame:
     """Fold the accumulated ±1 deltas to the net touch set (the deltas
     telescope, so net multiplicity is 1 for every live touch) and
     aggregate to q505's per-user card — column-for-column its oracle."""
-    deltas = spark.read.schema(_Q511_DELTA_SCHEMA).parquet(
-        f"{partials_path}/attrib"
-    )
+    deltas = sinks.landed(spark, f"{partials_path}/attrib", _Q511_DELTA)
     net = (
         deltas.groupBy("user_id", "purchase_id", "click_id", "share")
         .agg(F.sum("mult").alias("m"))
@@ -862,9 +834,7 @@ def q511_streaming_attribution_retractions(
     window+join over (purchases, clicks-so-far) — production scopes
     it to users present in the batch; the emission/drain (the hard
     part) is grain-identical either way."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     e = read_table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
@@ -878,24 +848,10 @@ def q511_streaming_attribution_retractions(
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("c_ts"),
     )
-    root = scratch_dir("mta_retract_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("mta_retract_", key=sf_dir)
     partials_path = f"{root}/partials"
-    (
-        spark.createDataFrame(
-            [], "c_user long, click_id long, c_ts timestamp_ntz,"
-            " __epoch int"
-        )
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(f"{partials_path}/clicks")
-    )
-    (
-        spark.createDataFrame([], _Q511_DELTA_SCHEMA)
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(f"{partials_path}/attrib")
-    )
+    sinks.seed(spark, f"{partials_path}/clicks", _Q511_CLICKS)
+    sinks.seed(spark, f"{partials_path}/attrib", _Q511_DELTA)
     ingest = _make_q511_epoch(spark, partials_path, purchases)
     ingest(clicks.filter(F.col("click_id") % 2 == 0), 0)
     ingest(clicks.filter(F.col("click_id") % 2 == 1), 1)
@@ -2018,50 +1974,38 @@ def q522_streaming_sliding_distinct(
 
     Scale shape: per-epoch state is day×user grain (the dedup bound a
     watermark would enforce in production); the drain fold is q515's."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     e = read_table(spark, sf_dir, "events")
     day = F.datediff(
         F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
     )
-    root = scratch_dir("sliding_distinct_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("sliding_distinct_", key=sf_dir)
     path = f"{root}/partials"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.select(day.alias("d"), "user_id")
-            .distinct()
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{path}/grain")
+        sinks.land(
+            batch_df.select(day.alias("d"), "user_id").distinct(),
+            epoch_id,
+            f"{path}/grain",
         )
-        (
+        sinks.land(
             batch_df.groupBy(day.alias("d"))
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{path}/daycounts")
+            .agg(F.count(F.lit(1)).cast("long").alias("c")),
+            epoch_id,
+            f"{path}/daycounts",
         )
 
     for _ep in range(_STREAM_EPOCHS):
         ingest(e.filter(
             F.col("event_id") % _STREAM_EPOCHS == _ep), _ep)
     du = (
-        spark.read.schema("d int, user_id long, __epoch int")
-        .parquet(f"{path}/grain")
+        sinks.landed(spark, f"{path}/grain", "d int, user_id long")
         .select("d", "user_id")
         .distinct()
     )
     dc = (
-        spark.read.schema("d int, c long, __epoch int")
-        .parquet(f"{path}/daycounts")
+        sinks.landed(spark, f"{path}/daycounts", "d int, c long")
         .groupBy("d")
         .agg(F.sum("c").cast("long").alias("c"))
     )
@@ -3180,9 +3124,7 @@ def q534_streaming_drift_monitor(
 
     Scale shape: per-epoch state is {_Q519_BINS}×2 counters — the
     associative-partial class (q474/q494)."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     w = (_Q519_HI - _Q519_LO) / _Q519_BINS
     e = read_table(spark, sf_dir, "events")
@@ -3200,12 +3142,11 @@ def q534_streaming_drift_monitor(
     # the reference min-day is a property of the WHOLE corpus; a real
     # deployment pins it in config — here derived once, like q519
     mind = p_all.agg(F.min("d").alias("m")).localCheckpoint(eager=False)
-    root = scratch_dir("drift_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("drift_stream_", key=sf_dir)
     path = f"{root}/partials"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+        sinks.land(
             batch_df.crossJoin(F.broadcast(mind))
             .withColumn("rel_d", F.col("d") - F.col("m"))
             .groupBy("bin")
@@ -3216,20 +3157,16 @@ def q534_streaming_drift_monitor(
                 F.sum(F.when(F.col("rel_d") >= 20, 1).otherwise(0))
                 .cast("long")
                 .alias("cb"),
-            )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+            ),
+            epoch_id,
+            path,
         )
 
     for _ep in range(_STREAM_EPOCHS):
         ingest(p_all.filter(
             F.col("event_id") % _STREAM_EPOCHS == _ep), _ep)
     counts = (
-        spark.read.schema("bin long, ca long, cb long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "bin long, ca long, cb long")
         .groupBy("bin")
         .agg(
             F.sum("ca").cast("long").alias("ca"),
@@ -3301,35 +3238,26 @@ def q535_streaming_transitions(
     Scale shape: per-epoch state is the batch's own rows (a
     production sink would watermark-compact per-user tails); the
     drain is q526's one window + one grouped count."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     e = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    root = scratch_dir("trans_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("trans_stream_", key=sf_dir)
     path = f"{root}/events"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
-        )
+        sinks.land(batch_df, epoch_id, path)
 
     for _ep in range(_STREAM_EPOCHS):
         ingest(e.filter(
             F.col("event_id") % _STREAM_EPOCHS == _ep), _ep)
     landed = (
-        spark.read.schema(
-            "user_id long, ts timestamp_ntz, event_id long,"
-            " event_type string, __epoch int"
+        sinks.landed(
+            spark,
+            path,
+            "user_id long, ts timestamp_ntz, event_id long, event_type string",
         )
-        .parquet(path)
         .drop("__epoch")
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -4394,14 +4322,11 @@ def q545_streaming_logprob_scoring(
 
     Scale shape: per-epoch state is token-frequency partials
     (vocabulary-grain) + doc-token grain for landed docs."""
-    import shutil
-
     from databricks_etl_spark.operators.text import tokens_col
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     d = read_table(spark, sf_dir, "documents")
-    root = scratch_dir("lm_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("lm_stream_", key=sf_dir)
     path = f"{root}/partials"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
@@ -4411,37 +4336,27 @@ def q545_streaming_logprob_scoring(
         grain = toks.groupBy("doc_id", "token").agg(
             F.count(F.lit(1)).cast("long").alias("tf")
         ).localCheckpoint(eager=False)
-        (
-            grain.groupBy("token")
-            .agg(F.sum("tf").cast("long").alias("tf"))
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{path}/vocab")
+        sinks.land(
+            grain.groupBy("token").agg(F.sum("tf").cast("long").alias("tf")),
+            epoch_id,
+            f"{path}/vocab",
         )
-        (
-            grain.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(f"{path}/grain")
-        )
+        sinks.land(grain, epoch_id, f"{path}/grain")
 
     for _ep in range(_STREAM_EPOCHS):
         ingest(d.filter(
             F.col("doc_id") % _STREAM_EPOCHS == _ep), _ep)
     vocab = (
-        spark.read.schema("token string, tf long, __epoch int")
-        .parquet(f"{path}/vocab")
+        sinks.landed(spark, f"{path}/vocab", "token string, tf long")
         .groupBy("token")
         .agg(F.sum("tf").cast("long").alias("tf"))
     )
     grain = (
-        spark.read.schema(
-            "doc_id long, token string, tf long, __epoch int"
+        sinks.landed(
+            spark,
+            f"{path}/grain",
+            "doc_id long, token string, tf long",
         )
-        .parquet(f"{path}/grain")
         .groupBy("doc_id", "token")
         .agg(F.sum("tf").cast("long").alias("dtf"))
     )
@@ -5573,35 +5488,27 @@ def q555_train_serve_skew_audit(
 
     Scale shape: both feature builds are keyed aggregates; the
     comparison is one join at entity grain."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     offline = q554_feature_store_materialization(spark, sf_dir)
     # "online": land raw event partials per epoch, rebuild features
     # from the landed union (a real deployment folds per-epoch
     # feature partials; landing grain keeps this audit total)
     e = read_table(spark, sf_dir, "events")
-    root = scratch_dir("tss_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("tss_stream_", key=sf_dir)
     path = f"{root}/events"
     for epoch, batch in [
         (0, e.filter(F.col("event_id") % 2 == 0)),
         (1, e.filter(F.col("event_id") % 2 == 1)),
     ]:
-        (
-            batch.withColumn("__epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
-        )
+        sinks.land(batch, epoch, path)
     landed = (
-        spark.read.schema(
+        sinks.landed(
+            spark,
+            path,
             "event_id long, user_id long, event_type string,"
-            " ts timestamp_ntz, value double, __epoch int"
+            " ts timestamp_ntz, value double",
         )
-        .parquet(path)
         .drop("__epoch")
     )
 
@@ -6294,18 +6201,15 @@ def q564_streaming_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-epoch state is customer-grain partials; the
     drain is q547's rank passes."""
-    import shutil
-
     from databricks_etl_spark.operators.quantile_bucket import exact_ntile
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     o = read_table(spark, sf_dir, "orders")
-    root = scratch_dir("rfm_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("rfm_stream_", key=sf_dir)
     path = f"{root}/partials"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+        sinks.land(
             batch_df.groupBy(F.col("o_custkey").alias("custkey"))
             .agg(
                 F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
@@ -6317,23 +6221,20 @@ def q564_streaming_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .cast("long")
                 .alias("cents"),
-            )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+            ),
+            epoch_id,
+            path,
         )
 
     for _ep in range(_STREAM_EPOCHS):
         ingest(o.filter(
             F.col("o_orderkey") % _STREAM_EPOCHS == _ep), _ep)
     per = (
-        spark.read.schema(
-            "custkey long, last_d date, freq long, cents long,"
-            " __epoch int"
+        sinks.landed(
+            spark,
+            path,
+            "custkey long, last_d date, freq long, cents long",
         )
-        .parquet(path)
         .groupBy("custkey")
         .agg(
             F.datediff(
@@ -7235,35 +7136,27 @@ def q573_streaming_growth_accounting(
 
     Scale shape: per-epoch state is the day×user grain; the drain is
     q566's keyed adjacency joins."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     e = read_table(spark, sf_dir, "events")
     day = F.datediff(
         F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
     )
-    root = scratch_dir("growth_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("growth_stream_", key=sf_dir)
     path = f"{root}/grain"
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.select(day.alias("d"), "user_id")
-            .distinct()
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+        sinks.land(
+            batch_df.select(day.alias("d"), "user_id").distinct(),
+            epoch_id,
+            path,
         )
 
     for _ep in range(_STREAM_EPOCHS):
         ingest(e.filter(
             F.col("event_id") % _STREAM_EPOCHS == _ep), _ep)
     du = (
-        spark.read.schema("d int, user_id long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "d int, user_id long")
         .select("d", "user_id")
         .distinct()
         .localCheckpoint(eager=False)

@@ -14,7 +14,6 @@ interaction).
 
 from __future__ import annotations
 
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -23,7 +22,8 @@ import databricks_etl_spark.plans.queries_round13 as _r13
 from databricks_etl_spark.operators import graph_ann as GA
 from databricks_etl_spark.plans.registry import QUERIES, query
 from databricks_etl_spark.sources.readers import read_table
-from databricks_etl_spark.sources.writers import scratch_dir
+from databricks_etl_spark.sources.writers import fresh_scratch_dir
+from databricks_etl_spark.streaming import sinks
 
 # ---------------------------------------------------------------------------
 # q576 — STREAMING graph-ANN maintenance (twin of q509)
@@ -60,23 +60,19 @@ def _q576_ingest(
         "sim",
     )
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-    (
+    sinks.land(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _r13._Q506_M)
-        .select("src", "dst", "sim")
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
+        .select("src", "dst", "sim"),
+        epoch_id,
+        path,
     )
 
 
 def _q576_drain(spark: SparkSession, path: str) -> DataFrame:
     """Re-rank landed candidates per inserted node → final edges."""
     landed = (
-        spark.read.schema("src long, dst long, sim double, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "src long, dst long, sim double")
         .drop("__epoch")
     )
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
@@ -126,8 +122,7 @@ def q576_streaming_graph_insert(
     )
     base = emb.filter(~is_ins).localCheckpoint()
     ins = emb.filter(is_ins)
-    root = scratch_dir("graphins_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("graphins_stream_", key=sf_dir)
     path = f"{root}/candidates"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     for ep in range(k):
@@ -1201,13 +1196,7 @@ def _q583_ingest(batch_docs: DataFrame, epoch_id: int, path: str) -> None:
     emb = _q332_embed(chunks, ["doc_id", "chunk_idx"], F.col("__toks")).filter(
         nrm(F.col("emb")) > 0
     )
-    (
-        emb.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
-    )
+    sinks.land(emb, epoch_id, path)
 
 
 @query(
@@ -1233,17 +1222,17 @@ def q583_streaming_maxsim_retrieval(
     embedding (map-side); landed state is chunk-grain; the drain is
     q577's scoring."""
     d = read_table(spark, sf_dir, "documents")
-    root = scratch_dir("maxsim_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("maxsim_stream_", key=sf_dir)
     path = f"{root}/chunk_emb"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     for ep in range(k):
         _q583_ingest(d.filter(F.col("doc_id") % k == ep), ep, path)
     landed = (
-        spark.read.schema(
-            "doc_id long, chunk_idx long, emb array<double>, __epoch int"
+        sinks.landed(
+            spark,
+            path,
+            "doc_id long, chunk_idx long, emb array<double>",
         )
-        .parquet(path)
         .drop("__epoch")
     )
     cemb = landed.filter(F.col("doc_id") % 50 != 0).select(
@@ -1450,25 +1439,11 @@ def _q585_ingest(li_epoch: DataFrame, epoch_id: int, path: str) -> None:
         .select("src", "dst")
         .distinct()
     )
-    (
-        edges.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(f"{path}/edges")
-    )
+    sinks.land(edges, epoch_id, f"{path}/edges")
     # node grain lands too: isolated parts (single-part orders) carry
     # teleport mass, so the drain must see them without re-reading the
     # source — the landed state IS the full input
-    (
-        li_epoch.select("pk")
-        .distinct()
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(f"{path}/nodes")
-    )
+    sinks.land(li_epoch.select("pk").distinct(), epoch_id, f"{path}/nodes")
 
 
 @query("q585_streaming_pagerank", oracle=_q581_oracle())
@@ -1497,8 +1472,7 @@ def q585_streaming_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    root = scratch_dir("pr_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("pr_stream_", key=sf_dir)
     path = f"{root}/state"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     for ep in range(k):
@@ -1510,8 +1484,7 @@ def q585_streaming_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
         )
     edges = (
-        spark.read.schema("src long, dst long, __epoch int")
-        .parquet(f"{path}/edges")
+        sinks.landed(spark, f"{path}/edges", "src long, dst long")
         .select("src", "dst")
         .distinct()
         .localCheckpoint()
@@ -1520,8 +1493,7 @@ def q585_streaming_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("d")
     ).localCheckpoint()
     nodes = (
-        spark.read.schema("pk long, __epoch int")
-        .parquet(f"{path}/nodes")
+        sinks.landed(spark, f"{path}/nodes", "pk long")
         .select("pk")
         .distinct()
         .localCheckpoint()
@@ -2442,24 +2414,17 @@ def q594_streaming_backfill_monitor(
         (day.cast("long") * 24 + F.hour("ts").cast("long")).alias("h"),
         "event_id",
     )
-    root = scratch_dir("backfill_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("backfill_stream_", key=sf_dir)
     path = f"{root}/present"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     for ep in range(k):
-        (
-            p_all.filter(F.col("event_id") % k == ep)
-            .select("h")
-            .distinct()
-            .withColumn("__epoch", F.lit(int(ep)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+        sinks.land(
+            p_all.filter(F.col("event_id") % k == ep).select("h").distinct(),
+            ep,
+            path,
         )
     present = (
-        spark.read.schema("h long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "h long")
         .select("h")
         .distinct()
         .localCheckpoint()
@@ -2487,7 +2452,7 @@ _Q595_HEX = "01"  # md5 first hex here → eval slice (~1/8)
 
 
 def _q595_oracle() -> str:
-    from databricks_etl_spark.plans.queries_round13 import _dot_sql
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     return f"""
         WITH base AS MATERIALIZED (
@@ -2868,12 +2833,11 @@ def q598_streaming_safety_stock(
     li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_partkey") % _Q582_MOD == 0
     )
-    root = scratch_dir("safety_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("safety_stream_", key=sf_dir)
     path = f"{root}/partials"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     for ep in range(k):
-        (
+        sinks.land(
             li.filter(F.col("l_orderkey") % k == ep)
             .groupBy(
                 F.col("l_partkey").alias("partkey"),
@@ -2883,18 +2847,12 @@ def q598_streaming_safety_stock(
                 F.sum(F.col("l_quantity").cast("long"))
                 .cast("long")
                 .alias("qty")
-            )
-            .withColumn("__epoch", F.lit(int(ep)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+            ),
+            ep,
+            path,
         )
     daily = (
-        spark.read.schema(
-            "partkey long, d date, qty long, __epoch int"
-        )
-        .parquet(path)
+        sinks.landed(spark, path, "partkey long, d date, qty long")
         .groupBy("partkey", "d")
         .agg(F.sum("qty").cast("long").alias("qty"))
     )
@@ -3507,12 +3465,11 @@ def q605_streaming_revenue_bridge(
         )
         .localCheckpoint()
     )
-    root = scratch_dir("bridge_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("bridge_stream_", key=sf_dir)
     path = f"{root}/partials"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     for ep in range(k):
-        (
+        sinks.land(
             enriched.filter(F.col("o_orderkey") % k == ep)
             .groupBy("nation")
             .agg(
@@ -3528,19 +3485,16 @@ def q605_streaming_revenue_bridge(
                 )
                 .cast("long")
                 .alias("curr_cents"),
-            )
-            .withColumn("__epoch", F.lit(int(ep)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+            ),
+            ep,
+            path,
         )
     per = (
-        spark.read.schema(
-            "nation string, prev_cents long, curr_cents long,"
-            " __epoch int"
+        sinks.landed(
+            spark,
+            path,
+            "nation string, prev_cents long, curr_cents long",
         )
-        .parquet(path)
         .groupBy("nation")
         .agg(
             F.sum("prev_cents").cast("long").alias("rev_prev_cents"),
@@ -3612,14 +3566,13 @@ def q606_streaming_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("label").alias("true_label"),
     ).withColumn("__qn", SIM.norm(F.col("qe"))).localCheckpoint()
-    root = scratch_dir("knn_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("knn_stream_", key=sf_dir)
     path = f"{root}/candidates"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     wk = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("dst"))
     for ep in range(k):
         batch = emb.filter(F.col("vec_id") % k == ep)
-        (
+        sinks.land(
             batch.withColumn("__cn", SIM.norm(F.col("embedding")))
             .join(F.broadcast(ev), F.col("vec_id") != F.col("qid"))
             .select(
@@ -3639,19 +3592,16 @@ def q606_streaming_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("rk", F.row_number().over(wk))
             .filter(F.col("rk") <= _Q595_K)
-            .drop("rk")
-            .withColumn("__epoch", F.lit(int(ep)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
+            .drop("rk"),
+            ep,
+            path,
         )
     landed = (
-        spark.read.schema(
-            "qid long, true_label int, nbr_label int, sim double,"
-            " dst long, __epoch int"
+        sinks.landed(
+            spark,
+            path,
+            "qid long, true_label int, nbr_label int, sim double, dst long",
         )
-        .parquet(path)
         .drop("__epoch")
     )
     topk = (

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from databricks_etl_spark.plans.registry import QUERIES, query
 from databricks_etl_spark.sources.readers import read_table
+from databricks_etl_spark.streaming import sinks
 
 # ---------------------------------------------------------------------------
 # q608 — exact average precision of the quality score as an en-detector
@@ -2708,22 +2709,8 @@ def _q627_ingest(li_epoch: DataFrame, epoch_id: int, path: str) -> None:
         .select("src", "dst")
         .distinct()
     )
-    (
-        edges.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(f"{path}/edges")
-    )
-    (
-        li_epoch.select("pk")
-        .distinct()
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(f"{path}/nodes")
-    )
+    sinks.land(edges, epoch_id, f"{path}/edges")
+    sinks.land(li_epoch.select("pk").distinct(), epoch_id, f"{path}/nodes")
 
 
 @query(
@@ -2742,11 +2729,9 @@ def q627_streaming_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-epoch state is the batch's own distinct edges;
     the drain is q619's loop."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
     from databricks_etl_spark.plans.queries_round13 import _Q514_MOD
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     li = (
         read_table(spark, sf_dir, "lineitem")
@@ -2757,8 +2742,7 @@ def q627_streaming_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    root = scratch_dir("sssp_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("sssp_stream_", key=sf_dir)
     path = f"{root}/state"
     k = _r13._STREAM_EPOCHS  # read at call time: tests raise it
     for ep in range(k):
@@ -2766,8 +2750,7 @@ def q627_streaming_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.filter(F.expr(f"ok DIV {_Q514_MOD}") % k == ep), ep, path
         )
     edges = (
-        spark.read.schema("src long, dst long, __epoch int")
-        .parquet(f"{path}/edges")
+        sinks.landed(spark, f"{path}/edges", "src long, dst long")
         .select("src", "dst")
         .distinct()
         .withColumn(
@@ -2776,8 +2759,7 @@ def q627_streaming_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     nodes = (
-        spark.read.schema("pk long, __epoch int")
-        .parquet(f"{path}/nodes")
+        sinks.landed(spark, f"{path}/nodes", "pk long")
         .select("pk")
         .distinct()
         .localCheckpoint()
@@ -2824,13 +2806,7 @@ def q627_streaming_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q628_ingest(scored_epoch: DataFrame, epoch_id: int, path: str) -> None:
     """Land one epoch's scored docs (doc grain — scoring is a pure
     per-doc function, so it is batch-local by construction)."""
-    (
-        scored_epoch.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
-    )
+    sinks.land(scored_epoch, epoch_id, path)
 
 
 @query(
@@ -2850,16 +2826,13 @@ def q628_streaming_average_precision(
 
     Scale shape: per-epoch scoring touches only the batch; the
     drain is q608's two range-partitioned folds."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
     from databricks_etl_spark.operators import text as TX
     from databricks_etl_spark.operators.quantile_bucket import exact_cumsum
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     d = read_table(spark, sf_dir, "documents").localCheckpoint()
-    root = scratch_dir("ap_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("ap_stream_", key=sf_dir)
     path = f"{root}/scored"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
@@ -2879,8 +2852,7 @@ def q628_streaming_average_precision(
         )
         _q628_ingest(scored, ep, path)
     landed = (
-        spark.read.schema("doc_id long, s4 long, pos boolean, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "doc_id long, s4 long, pos boolean")
         .select("doc_id", "s4", "pos")
         .withColumn("s4neg", -F.col("s4"))
         .withColumn("one", F.lit(1).cast("long"))
@@ -2911,17 +2883,14 @@ def _q629_ingest(v_epoch: DataFrame, epoch_id: int, path: str) -> None:
     """Land one epoch's bin partials — counts are MERGEABLE, so the
     landed state is a per-epoch partial aggregate, not raw rows (the
     q132 incremental-agg discipline applied to a feature audit)."""
-    (
+    sinks.land(
         v_epoch.groupBy("bin")
         .agg(
             F.sum("y").cast("long").alias("gb"),
             (F.count(F.lit(1)) - F.sum("y")).cast("long").alias("bb"),
-        )
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
+        ),
+        epoch_id,
+        path,
     )
 
 
@@ -2940,14 +2909,11 @@ def q629_streaming_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-epoch partial aggregation map-side; drain is a
     bin-grain rollup + 1-row totals."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     c = read_table(spark, sf_dir, "customer").localCheckpoint()
-    root = scratch_dir("woe_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("woe_stream_", key=sf_dir)
     path = f"{root}/bins"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
@@ -2963,8 +2929,7 @@ def q629_streaming_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _q629_ingest(v, ep, path)
     bins = (
-        spark.read.schema("bin long, gb long, bb long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "bin long, gb long, bb long")
         .groupBy("bin")
         .agg(
             F.sum("gb").cast("long").alias("gb"),
@@ -2988,7 +2953,7 @@ def q629_streaming_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q630_ingest(o_epoch: DataFrame, epoch_id: int, path: str) -> None:
     """Land one epoch's monthly revenue partials (additive)."""
-    (
+    sinks.land(
         o_epoch.groupBy(
             F.date_format(F.col("o_orderdate").cast("date"), "yyyy-MM")
             .alias("m")
@@ -2997,12 +2962,9 @@ def _q630_ingest(o_epoch: DataFrame, epoch_id: int, path: str) -> None:
             F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
             .cast("long")
             .alias("x")
-        )
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
+        ),
+        epoch_id,
+        path,
     )
 
 
@@ -3021,21 +2983,17 @@ def q630_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-epoch partial rollup; drain = month-grain merge
     + the bounded-grid Python fold."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
-    root = scratch_dir("holt_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("holt_stream_", key=sf_dir)
     path = f"{root}/monthly"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         _q630_ingest(o.filter(F.col("o_orderkey") % k == ep), ep, path)
     monthly = (
-        spark.read.schema("m string, x long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "m string, x long")
         .groupBy("m")
         .agg(F.sum("x").cast("long").alias("x"))
         .orderBy("m")
@@ -3061,13 +3019,7 @@ def q630_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q631_ingest(cells_epoch: DataFrame, epoch_id: int, path: str) -> None:
     """Land one epoch's contingency-cell partials (additive)."""
-    (
-        cells_epoch.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
-    )
+    sinks.land(cells_epoch, epoch_id, path)
 
 
 @query(
@@ -3086,15 +3038,12 @@ def q631_streaming_cramers_v(
 
     Scale shape: per-epoch cell partials bounded by the level-count
     product; drain is cell-grain merge + the q625 arithmetic."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
     cust = read_table(spark, sf_dir, "customer").localCheckpoint()
-    root = scratch_dir("cramers_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("cramers_stream_", key=sf_dir)
     path = f"{root}/cells"
     k = _r13._STREAM_EPOCHS
     pairs = [
@@ -3119,10 +3068,7 @@ def q631_streaming_cramers_v(
         )
         _q631_ingest(cells, ep, path)
     cells = (
-        spark.read.schema(
-            "pair string, av string, bv string, o long, __epoch int"
-        )
-        .parquet(path)
+        sinks.landed(spark, path, "pair string, av string, bv string, o long")
         .groupBy("pair", "av", "bv")
         .agg(F.sum("o").cast("long").alias("o"))
         .localCheckpoint()
@@ -5926,13 +5872,7 @@ def q650_holt_winters_composed(
 
 def _q651_ingest(part_epoch: DataFrame, epoch_id: int, path: str) -> None:
     """Land one epoch's (partkey, day, qty) partials (additive)."""
-    (
-        part_epoch.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
-    )
+    sinks.land(part_epoch, epoch_id, path)
 
 
 @query(
@@ -5951,21 +5891,18 @@ def q651_streaming_newsvendor(
 
     Scale shape: per-epoch partial rollup; drain = day-grain merge +
     the q642 per-part prefix fold."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
     from pyspark.sql import Window as W
 
     from databricks_etl_spark.plans.queries_round14 import _Q582_MOD
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     li = (
         read_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_partkey") % _Q582_MOD == 0)
         .localCheckpoint()
     )
-    root = scratch_dir("nv_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("nv_stream_", key=sf_dir)
     path = f"{root}/daily"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
@@ -5983,8 +5920,7 @@ def q651_streaming_newsvendor(
         )
         _q651_ingest(part, ep, path)
     daily = (
-        spark.read.schema("partkey long, d date, qty long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "partkey long, d date, qty long")
         .groupBy("partkey", "d")
         .agg(F.sum("qty").cast("long").alias("qty"))
         .localCheckpoint()
@@ -6056,15 +5992,12 @@ def q652_streaming_eb_shrinkage(
 
     Scale shape: per-epoch brand partials (25 rows each); drain is
     the q649 arithmetic."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     li = read_table(spark, sf_dir, "lineitem").localCheckpoint()
     p = read_table(spark, sf_dir, "part").localCheckpoint()
-    root = scratch_dir("eb_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("eb_stream_", key=sf_dir)
     path = f"{root}/brands"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
@@ -6082,16 +6015,9 @@ def q652_streaming_eb_shrinkage(
                 .alias("kb"),
             )
         )
-        (
-            part.withColumn("__epoch", F.lit(int(ep)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
-        )
+        sinks.land(part, ep, path)
     b = (
-        spark.read.schema("brand string, nb long, kb long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "brand string, nb long, kb long")
         .groupBy("brand")
         .agg(
             F.sum("nb").cast("long").alias("nb"),
@@ -6128,13 +6054,7 @@ def q652_streaming_eb_shrinkage(
 def _q653_ingest(dur_epoch: DataFrame, epoch_id: int, path: str) -> None:
     """Land one epoch's user durations (user grain — a user's whole
     event history lives in one epoch, so durations are batch-local)."""
-    (
-        dur_epoch.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
-    )
+    sinks.land(dur_epoch, epoch_id, path)
 
 
 @query(
@@ -6154,15 +6074,12 @@ def q653_streaming_nelson_aalen(
 
     Scale shape: per-epoch duration rollup on the batch's users;
     drain = q647's grid fold."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
     from databricks_etl_spark.operators.quantile_bucket import exact_cumsum
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     e = read_table(spark, sf_dir, "events").localCheckpoint()
-    root = scratch_dir("na_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("na_stream_", key=sf_dir)
     path = f"{root}/dur"
     k = _r13._STREAM_EPOCHS
     sec = F.unix_timestamp(F.col("ts")).cast("long")
@@ -6197,8 +6114,7 @@ def q653_streaming_nelson_aalen(
         )
         _q653_ingest(dur, ep, path)
     dur = (
-        spark.read.schema("t long, died boolean, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "t long, died boolean")
         .select("t", "died")
         .localCheckpoint()
     )
@@ -6253,11 +6169,9 @@ def q654_streaming_assortativity(
 
     Scale shape: per-epoch edge partials; drain = one degree rollup
     + edge decoration + 1-row moments."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
     from databricks_etl_spark.plans.queries_round13 import _Q514_MOD
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     li = (
         read_table(spark, sf_dir, "lineitem")
@@ -6268,8 +6182,7 @@ def q654_streaming_assortativity(
         .distinct()
         .localCheckpoint()
     )
-    root = scratch_dir("assort_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("assort_stream_", key=sf_dir)
     path = f"{root}/state"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
@@ -6277,8 +6190,7 @@ def q654_streaming_assortativity(
             li.filter(F.expr(f"ok DIV {_Q514_MOD}") % k == ep), ep, path
         )
     edges = (
-        spark.read.schema("src long, dst long, __epoch int")
-        .parquet(f"{path}/edges")
+        sinks.landed(spark, f"{path}/edges", "src long, dst long")
         .select("src", "dst")
         .distinct()
         .localCheckpoint()
@@ -6329,11 +6241,9 @@ def q655_streaming_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-epoch edge/node partials; drain = q620's six
     semi-join peels."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
     from databricks_etl_spark.plans.queries_round13 import _Q514_MOD
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     li = (
         read_table(spark, sf_dir, "lineitem")
@@ -6344,8 +6254,7 @@ def q655_streaming_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    root = scratch_dir("kcore_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("kcore_stream_", key=sf_dir)
     path = f"{root}/state"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
@@ -6353,15 +6262,13 @@ def q655_streaming_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.filter(F.expr(f"ok DIV {_Q514_MOD}") % k == ep), ep, path
         )
     edges = (
-        spark.read.schema("src long, dst long, __epoch int")
-        .parquet(f"{path}/edges")
+        sinks.landed(spark, f"{path}/edges", "src long, dst long")
         .select("src", "dst")
         .distinct()
         .localCheckpoint()
     )
     surv = (
-        spark.read.schema("pk long, __epoch int")
-        .parquet(f"{path}/nodes")
+        sinks.landed(spark, f"{path}/nodes", "pk long")
         .select("pk")
         .distinct()
         .localCheckpoint()
@@ -6422,15 +6329,12 @@ def q656_streaming_mutual_information(
 
     Scale shape: shared with q631 — cell partials per epoch, cell
     merge + margin/entropy arithmetic at drain."""
-    import shutil
-
     import databricks_etl_spark.plans.queries_round13 as _r13
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
     cust = read_table(spark, sf_dir, "customer").localCheckpoint()
-    root = scratch_dir("mi_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch_dir("mi_stream_", key=sf_dir)
     path = f"{root}/cells"
     k = _r13._STREAM_EPOCHS
     pairs = [
@@ -6455,10 +6359,7 @@ def q656_streaming_mutual_information(
         )
         _q631_ingest(cells, ep, path)
     cells = (
-        spark.read.schema(
-            "pair string, av string, bv string, o long, __epoch int"
-        )
-        .parquet(path)
+        sinks.landed(spark, path, "pair string, av string, bv string, o long")
         .groupBy("pair", "av", "bv")
         .agg(F.sum("o").cast("long").alias("o"))
         .localCheckpoint()

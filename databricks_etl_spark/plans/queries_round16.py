@@ -65,6 +65,8 @@ from pyspark.sql import functions as F
 
 from databricks_etl_spark.plans.registry import QUERIES, query
 from databricks_etl_spark.sources.readers import read_table
+from databricks_etl_spark.sources.writers import fresh_scratch_dir
+from databricks_etl_spark.streaming import sinks
 
 # ---------------------------------------------------------------------------
 # q657 — AR(2) one-step backtest (Yule–Walker from the exact ACF)
@@ -299,14 +301,14 @@ def _q658_oracle() -> str:
     from databricks_etl_spark.plans.queries_round7 import (
         _Q285_CENTS,
         _Q285_D2,
-        _Q285_DOT,
     )
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     vals = ", ".join(f"({j}, {c})" for j, c in enumerate(_Q285_CENTS))
     sim = (
-        f"round({_Q285_DOT.format(a='c.embedding', b='b.embedding')}"
-        f" / (sqrt({_Q285_DOT.format(a='c.embedding', b='c.embedding')})"
-        f" * sqrt({_Q285_DOT.format(a='b.embedding', b='b.embedding')}))"
+        f"round({_dot_sql('c.embedding', 'b.embedding')}"
+        f" / (sqrt({_dot_sql('c.embedding', 'c.embedding')})"
+        f" * sqrt({_dot_sql('b.embedding', 'b.embedding')}))"
         ", 6)"
     )
     return f"""
@@ -1974,28 +1976,6 @@ def _q668_card_from_grain(grain: DataFrame) -> DataFrame:
 # ===========================================================================
 
 
-def _q16_land(df: DataFrame, epoch_id: int, path: str) -> None:
-    """Land one epoch's partial rows (epoch-idempotent: re-landing an
-    epoch replaces exactly its own partition)."""
-    (
-        df.withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(path)
-    )
-
-
-def _q16_stream_root(name: str, sf_dir: str) -> str:
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
-
-    root = scratch_dir(f"{name}_stream_", key=sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    return root
-
-
 @query(
     "q669_streaming_ar2_backtest",
     oracle=QUERIES["q657_ar2_backtest"].oracle,
@@ -2016,7 +1996,7 @@ def q669_streaming_ar2_backtest(
     import databricks_etl_spark.plans.queries_round13 as _r13
 
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
-    path = _q16_stream_root("ar2", sf_dir) + "/daily"
+    path = fresh_scratch_dir("ar2_stream_", key=sf_dir) + "/daily"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -2030,10 +2010,9 @@ def q669_streaming_ar2_backtest(
                 .alias("x")
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     daily = (
-        spark.read.schema("d date, x long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "d date, x long")
         .groupBy("d")
         .agg(F.sum("x").cast("long").alias("x"))
     )
@@ -2068,19 +2047,19 @@ def q670_streaming_semantic_decontamination(
     cents = spark.createDataFrame(
         list(enumerate(_Q285_CENTS)), "cid int, centroid array<double>"
     )
-    path = _q16_stream_root("semdecon", sf_dir) + "/cells"
+    path = fresh_scratch_dir("semdecon_stream_", key=sf_dir) + "/cells"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = SIM.assign_cells(
             e.filter(F.col("vec_id") % k == ep), cents
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     cells = (
-        spark.read.schema(
-            "vec_id long, embedding array<double>, cell_id int,"
-            " __epoch int"
+        sinks.landed(
+            spark,
+            path,
+            "vec_id long, embedding array<double>, cell_id int",
         )
-        .parquet(path)
         .select("vec_id", "embedding", "cell_id")
         .localCheckpoint()
     )
@@ -2117,22 +2096,20 @@ def q671_streaming_harmonic_centrality(
         .distinct()
         .localCheckpoint()
     )
-    path = _q16_stream_root("harm", sf_dir) + "/state"
+    path = fresh_scratch_dir("harm_stream_", key=sf_dir) + "/state"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         _q627_ingest(
             li.filter(F.expr(f"ok DIV {_Q514_MOD}") % k == ep), ep, path
         )
     edges = (
-        spark.read.schema("src long, dst long, __epoch int")
-        .parquet(f"{path}/edges")
+        sinks.landed(spark, f"{path}/edges", "src long, dst long")
         .select("src", "dst")
         .distinct()
         .localCheckpoint()
     )
     nodes = (
-        spark.read.schema("pk long, __epoch int")
-        .parquet(f"{path}/nodes")
+        sinks.landed(spark, f"{path}/nodes", "pk long")
         .select("pk")
         .distinct()
     )
@@ -2161,7 +2138,7 @@ def q672_streaming_logistic_irls(
     from databricks_etl_spark.operators import text as TX
 
     d = read_table(spark, sf_dir, "documents").localCheckpoint()
-    path = _q16_stream_root("irls", sf_dir) + "/grain"
+    path = fresh_scratch_dir("irls_stream_", key=sf_dir) + "/grain"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         sl = d.filter(F.col("doc_id") % k == ep)
@@ -2183,10 +2160,9 @@ def q672_streaming_logistic_irls(
             .groupBy("x", "y")
             .agg(F.count(F.lit(1)).cast("long").alias("ct"))
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     grain = (
-        spark.read.schema("x long, y int, ct long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "x long, y int, ct long")
         .groupBy("x", "y")
         .agg(F.sum("ct").cast("long").alias("ct"))
     )
@@ -2214,7 +2190,7 @@ def q673_streaming_js_divergence(
     from databricks_etl_spark.operators.text import tokens_col
 
     d = read_table(spark, sf_dir, "documents").localCheckpoint()
-    path = _q16_stream_root("jsd", sf_dir) + "/stf"
+    path = fresh_scratch_dir("jsd_stream_", key=sf_dir) + "/stf"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -2225,12 +2201,9 @@ def q673_streaming_js_divergence(
             .groupBy("source", "token")
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     stf = (
-        spark.read.schema(
-            "source string, token string, tf long, __epoch int"
-        )
-        .parquet(path)
+        sinks.landed(spark, path, "source string, token string, tf long")
         .groupBy("source", "token")
         .agg(F.sum("tf").cast("long").alias("tf"))
     )
@@ -2256,7 +2229,7 @@ def q674_streaming_mann_kendall(
     import databricks_etl_spark.plans.queries_round13 as _r13
 
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
-    path = _q16_stream_root("mk", sf_dir) + "/monthly"
+    path = fresh_scratch_dir("mk_stream_", key=sf_dir) + "/monthly"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -2274,10 +2247,9 @@ def q674_streaming_mann_kendall(
                 .alias("x")
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     monthly = (
-        spark.read.schema("m string, x long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "m string, x long")
         .groupBy("m")
         .agg(F.sum("x").cast("long").alias("x"))
     )
@@ -2303,7 +2275,7 @@ def q675_streaming_jarque_bera(
     import databricks_etl_spark.plans.queries_round13 as _r13
 
     li = read_table(spark, sf_dir, "lineitem").localCheckpoint()
-    path = _q16_stream_root("jb", sf_dir) + "/grain"
+    path = fresh_scratch_dir("jb_stream_", key=sf_dir) + "/grain"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -2314,10 +2286,9 @@ def q675_streaming_jarque_bera(
             )
             .agg(F.count(F.lit(1)).cast("long").alias("ct"))
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     grain = (
-        spark.read.schema("flag string, v long, ct long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "flag string, v long, ct long")
         .groupBy("flag", "v")
         .agg(F.sum("ct").cast("long").alias("ct"))
     )
@@ -2345,7 +2316,7 @@ def q676_streaming_brown_forsythe(
     import databricks_etl_spark.plans.queries_round13 as _r13
 
     li = read_table(spark, sf_dir, "lineitem").localCheckpoint()
-    path = _q16_stream_root("bf", sf_dir) + "/grain"
+    path = fresh_scratch_dir("bf_stream_", key=sf_dir) + "/grain"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -2359,12 +2330,9 @@ def q676_streaming_brown_forsythe(
             .groupBy("grp", "cents")
             .agg(F.count(F.lit(1)).cast("long").alias("ct"))
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     grain = (
-        spark.read.schema(
-            "grp string, cents long, ct long, __epoch int"
-        )
-        .parquet(path)
+        sinks.landed(spark, path, "grp string, cents long, ct long")
         .groupBy("grp", "cents")
         .agg(F.sum("ct").cast("long").alias("ct"))
     )
@@ -3024,7 +2992,7 @@ def q681_streaming_ks_two_sample(
     import databricks_etl_spark.plans.queries_round13 as _r13
 
     li = read_table(spark, sf_dir, "lineitem").localCheckpoint()
-    path = _q16_stream_root("ks", sf_dir) + "/grain"
+    path = fresh_scratch_dir("ks_stream_", key=sf_dir) + "/grain"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -3046,10 +3014,9 @@ def q681_streaming_ks_two_sample(
                 .alias("ctr"),
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     grain = (
-        spark.read.schema("cents long, cta long, ctr long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "cents long, cta long, ctr long")
         .groupBy("cents")
         .agg(
             F.sum("cta").cast("long").alias("cta"),
@@ -3082,7 +3049,7 @@ def q682_streaming_friedman(
     y0, y1 = _Q678_YEARS[0], _Q678_YEARS[-1]
     yr = F.year(F.col("o_orderdate").cast("date"))
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    path = _q16_stream_root("friedman", sf_dir) + "/blocks"
+    path = fresh_scratch_dir("friedman_stream_", key=sf_dir) + "/blocks"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -3105,11 +3072,10 @@ def q682_streaming_friedman(
                 ]
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     cols = ", ".join(f"x{y} long" for y in _Q678_YEARS)
     blocks = (
-        spark.read.schema(f"nk long, {cols}, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, f"nk long, {cols}")
         .groupBy("nk")
         .agg(
             *[
@@ -3143,7 +3109,7 @@ def q683_streaming_cochran_q(
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
     y0, y1 = _Q678_YEARS[0], _Q678_YEARS[-1]
     yr = F.year(F.col("o_orderdate").cast("date"))
-    path = _q16_stream_root("cochran", sf_dir) + "/rows"
+    path = fresh_scratch_dir("cochran_stream_", key=sf_dir) + "/rows"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -3162,11 +3128,10 @@ def q683_streaming_cochran_q(
                 ]
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     cols = ", ".join(f"b{y} int" for y in _Q678_YEARS)
     rows = (
-        spark.read.schema(f"o_custkey long, {cols}, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, f"o_custkey long, {cols}")
         .groupBy("o_custkey")
         .agg(
             *[
@@ -3197,7 +3162,7 @@ def q684_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
     yr = F.year(F.col("o_orderdate").cast("date"))
     b = _q680_bin("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-    path = _q16_stream_root("psi", sf_dir) + "/bins"
+    path = fresh_scratch_dir("psi_stream_", key=sf_dir) + "/bins"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -3220,10 +3185,9 @@ def q684_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("c1"),
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     raw = (
-        spark.read.schema("bin long, c0 long, c1 long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "bin long, c0 long, c1 long")
         .groupBy("bin")
         .agg(
             F.sum("c0").cast("long").alias("c0"),
@@ -4009,7 +3973,7 @@ def q692_streaming_turning_points(
     import databricks_etl_spark.plans.queries_round13 as _r13
 
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
-    path = _q16_stream_root("tp", sf_dir) + "/monthly"
+    path = fresh_scratch_dir("tp_stream_", key=sf_dir) + "/monthly"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -4027,10 +3991,9 @@ def q692_streaming_turning_points(
                 .alias("x")
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     monthly = (
-        spark.read.schema("m string, x long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "m string, x long")
         .groupBy("m")
         .agg(F.sum("x").cast("long").alias("x"))
     )
@@ -4053,7 +4016,7 @@ def q693_streaming_runs_test(
     import databricks_etl_spark.plans.queries_round13 as _r13
 
     o = read_table(spark, sf_dir, "orders").localCheckpoint()
-    path = _q16_stream_root("runs", sf_dir) + "/daily"
+    path = fresh_scratch_dir("runs_stream_", key=sf_dir) + "/daily"
     k = _r13._STREAM_EPOCHS
     for ep in range(k):
         part = (
@@ -4067,10 +4030,9 @@ def q693_streaming_runs_test(
                 .alias("x")
             )
         )
-        _q16_land(part, ep, path)
+        sinks.land(part, ep, path)
     daily = (
-        spark.read.schema("d date, x long, __epoch int")
-        .parquet(path)
+        sinks.landed(spark, path, "d date, x long")
         .groupBy("d")
         .agg(F.sum("x").cast("long").alias("x"))
     )

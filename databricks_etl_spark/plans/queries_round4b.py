@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databricks_etl_spark.plans.queries_round4 import _band_buckets, _BANDS_SQL
+from databricks_etl_spark.plans.queries_similarity import _dot_sql
 from databricks_etl_spark.plans.registry import query
 from databricks_etl_spark.sources.readers import read_table
 
@@ -722,12 +723,6 @@ def q192_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q193 — cosine similarity threshold join (exact audit rung)
 # ---------------------------------------------------------------------------
 
-_Q193_DOT = (
-    "list_sum(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-)
-
-
 @query(
     "q193_cosine_threshold_join",
     oracle=f"""
@@ -736,9 +731,9 @@ _Q193_DOT = (
              c AS (SELECT vec_id AS id_b, embedding AS ce FROM embeddings),
              s AS (
                 SELECT id_a, id_b,
-                       round({_Q193_DOT.format(a='qe', b='ce')}
-                             / (sqrt({_Q193_DOT.format(a='qe', b='qe')})
-                                * sqrt({_Q193_DOT.format(a='ce', b='ce')})), 6)
+                       round({_dot_sql('qe', 'ce')}
+                             / (sqrt({_dot_sql('qe', 'qe')})
+                                * sqrt({_dot_sql('ce', 'ce')})), 6)
                            AS cosine_sim
                 FROM q, c WHERE id_a < id_b
              )

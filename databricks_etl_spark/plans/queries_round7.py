@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from databricks_etl_spark.operators import similarity as SIM
 from databricks_etl_spark.operators import text as TX
+from databricks_etl_spark.plans.queries_similarity import _dot_sql
 from databricks_etl_spark.plans.registry import query
 from databricks_etl_spark.sources.readers import read_table
 
@@ -151,10 +152,6 @@ _Q285_D2 = (
     "i -> (CAST(embedding[i] AS DOUBLE) - c[i])"
     " * (CAST(embedding[i] AS DOUBLE) - c[i])))"
 )
-_Q285_DOT = (
-    "list_sum(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-)
 
 
 def _quality_sql(src: str = "documents") -> str:
@@ -188,11 +185,10 @@ def _quality_sql(src: str = "documents") -> str:
 
 def _q285_oracle() -> str:
     vals = ", ".join(f"({j}, {c})" for j, c in enumerate(_Q285_CENTS))
-    dot = _Q285_DOT
     sim = (
-        f"round({dot.format(a='a.embedding', b='b.embedding')}"
-        f" / (sqrt({dot.format(a='a.embedding', b='a.embedding')})"
-        f" * sqrt({dot.format(a='b.embedding', b='b.embedding')})), 6)"
+        f"round({_dot_sql('a.embedding', 'b.embedding')}"
+        f" / (sqrt({_dot_sql('a.embedding', 'a.embedding')})"
+        f" * sqrt({_dot_sql('b.embedding', 'b.embedding')})), 6)"
     )
     return f"""
         WITH cents(cid, c) AS (VALUES {vals}),
@@ -348,11 +344,10 @@ def _semdedup_cells_sql() -> str:
 
 
 def _q287_oracle() -> str:
-    dot = _Q285_DOT
     sim = (
-        f"round({dot.format(a='b.embedding', b='c.embedding')}"
-        f" / (sqrt({dot.format(a='b.embedding', b='b.embedding')})"
-        f" * sqrt({dot.format(a='c.embedding', b='c.embedding')})), 6)"
+        f"round({_dot_sql('b.embedding', 'c.embedding')}"
+        f" / (sqrt({_dot_sql('b.embedding', 'b.embedding')})"
+        f" * sqrt({_dot_sql('c.embedding', 'c.embedding')})), 6)"
     )
     return f"""
         WITH {_semdedup_cells_sql()},
@@ -406,9 +401,6 @@ _Q["q287_semdedup_incremental"] = _replace(
 # q288 — int8 embedding quantization fidelity audit
 # ---------------------------------------------------------------------------
 
-_Q288_DOT = _Q285_DOT
-
-
 @query(
     "q288_embedding_quantization_audit",
     oracle=f"""
@@ -435,9 +427,9 @@ _Q288_DOT = _Q285_DOT
         ),
         per AS (
             SELECT vec_id,
-                   round({_Q288_DOT.format(a='embedding', b='d')}
-                         / (sqrt({_Q288_DOT.format(a='embedding', b='embedding')})
-                            * sqrt({_Q288_DOT.format(a='d', b='d')})), 6)
+                   round({_dot_sql('embedding', 'd')}
+                         / (sqrt({_dot_sql('embedding', 'embedding')})
+                            * sqrt({_dot_sql('d', 'd')})), 6)
                        AS fid,
                    round(list_max(list_transform(range(1, len(embedding) + 1),
                        i -> abs(CAST(embedding[i] AS DOUBLE) - d[i]))), 6)
@@ -769,9 +761,9 @@ def q291_padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                    FROM embeddings),
              s AS (
                 SELECT qid, nid, nl,
-                       round({_Q285_DOT.format(a='qe', b='ce')}
-                             / (sqrt({_Q285_DOT.format(a='qe', b='qe')})
-                                * sqrt({_Q285_DOT.format(a='ce', b='ce')})), 6)
+                       round({_dot_sql('qe', 'ce')}
+                             / (sqrt({_dot_sql('qe', 'qe')})
+                                * sqrt({_dot_sql('ce', 'ce')})), 6)
                            + 0.0 AS cosine_sim
                 FROM q, c WHERE ql != nl
              ),
@@ -1038,13 +1030,12 @@ def q294_winsorized_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q295_oracle() -> str:
-    dot = _Q285_DOT
 
     def sim(x, y):
         return (
-            f"round({dot.format(a=x, b=y)}"
-            f" / (sqrt({dot.format(a=x, b=x)})"
-            f" * sqrt({dot.format(a=y, b=y)})), 6)"
+            f"round({_dot_sql(x, y)}"
+            f" / (sqrt({_dot_sql(x, x)})"
+            f" * sqrt({_dot_sql(y, y)})), 6)"
         )
 
     return f"""
@@ -2213,9 +2204,9 @@ def q309_multimodal_dedup_verdict(spark: SparkSession, sf_dir: str) -> DataFrame
         s AS (
             SELECT q.vec_id AS qid, c.vec_id AS nid,
                    q.cell_id = c.cell_id AS same_cell,
-                   round({_Q285_DOT.format(a='q.embedding', b='c.embedding')}
-                         / (sqrt({_Q285_DOT.format(a='q.embedding', b='q.embedding')})
-                            * sqrt({_Q285_DOT.format(a='c.embedding', b='c.embedding')})),
+                   round({_dot_sql('q.embedding', 'c.embedding')}
+                         / (sqrt({_dot_sql('q.embedding', 'q.embedding')})
+                            * sqrt({_dot_sql('c.embedding', 'c.embedding')})),
                          6) AS sim
             FROM q JOIN cells c ON q.vec_id <> c.vec_id
         ),

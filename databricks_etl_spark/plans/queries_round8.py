@@ -439,12 +439,12 @@ def _q316_chain() -> str:
         for m in range(_Q316_M)
         for k in range(_Q316_K)
     )
-    from databricks_etl_spark.plans.queries_round7 import _Q285_DOT
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     sim = (
-        f"round({_Q285_DOT.format(a='e.embedding', b='r.rv')}"
-        f" / (sqrt({_Q285_DOT.format(a='e.embedding', b='e.embedding')})"
-        f" * sqrt({_Q285_DOT.format(a='r.rv', b='r.rv')})), 6)"
+        f"round({_dot_sql('e.embedding', 'r.rv')}"
+        f" / (sqrt({_dot_sql('e.embedding', 'e.embedding')})"
+        f" * sqrt({_dot_sql('r.rv', 'r.rv')})), 6)"
     )
     return f"""cb(m, k, cw) AS (VALUES {vals}),
         sub AS (
@@ -678,18 +678,18 @@ def q317_pq_recall_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q317_oracle() -> str:
-    from databricks_etl_spark.plans.queries_round7 import _Q285_DOT
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     o310 = QUERIES["q310_ann_recall_mrr"].oracle
     sim_exact = (
-        f"round({_Q285_DOT.format(a='q.__qe', b='c.embedding')}"
-        f" / (sqrt({_Q285_DOT.format(a='q.__qe', b='q.__qe')})"
-        f" * sqrt({_Q285_DOT.format(a='c.embedding', b='c.embedding')})), 6)"
+        f"round({_dot_sql('q.__qe', 'c.embedding')}"
+        f" / (sqrt({_dot_sql('q.__qe', 'q.__qe')})"
+        f" * sqrt({_dot_sql('c.embedding', 'c.embedding')})), 6)"
     )
     sim_pq = (
-        f"round({_Q285_DOT.format(a='q.__qe', b='r.rv')}"
-        f" / (sqrt({_Q285_DOT.format(a='q.__qe', b='q.__qe')})"
-        f" * sqrt({_Q285_DOT.format(a='r.rv', b='r.rv')})), 6)"
+        f"round({_dot_sql('q.__qe', 'r.rv')}"
+        f" / (sqrt({_dot_sql('q.__qe', 'q.__qe')})"
+        f" * sqrt({_dot_sql('r.rv', 'r.rv')})), 6)"
     )
     return f"""
         WITH {_q316_chain()},

@@ -288,19 +288,19 @@ def _q327_chain() -> str:
     from databricks_etl_spark.plans.queries_round7 import (
         _Q285_CENTS,
         _Q285_D2,
-        _Q285_DOT,
         _Q285_T,
         _XL,
         _XS,
         _quality_sql,
     )
+    from databricks_etl_spark.plans.queries_similarity import _dot_sql
 
     o311 = QUERIES["q311_vocab_drift"].oracle
     vals = ", ".join(f"({j}, {c})" for j, c in enumerate(_Q285_CENTS))
     sim = (
-        f"round({_Q285_DOT.format(a='b.embedding', b='c.embedding')}"
-        f" / (sqrt({_Q285_DOT.format(a='b.embedding', b='b.embedding')})"
-        f" * sqrt({_Q285_DOT.format(a='c.embedding', b='c.embedding')})), 6)"
+        f"round({_dot_sql('b.embedding', 'c.embedding')}"
+        f" / (sqrt({_dot_sql('b.embedding', 'b.embedding')})"
+        f" * sqrt({_dot_sql('c.embedding', 'c.embedding')})), 6)"
     )
     return f"""
         WITH delta_docs AS (

@@ -129,7 +129,7 @@ def scaled_partitions(
     total = 0
     for t in tables:
         try:
-            total += os.path.getsize(os.path.join(sf_dir, f"{t}.parquet"))
+            total += _table_bytes(os.path.join(sf_dir, f"{t}.parquet"))
         except OSError:
             pass
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -137,6 +137,18 @@ def scaled_partitions(
     return max(floor, min(session, want))
 
 
+def _table_bytes(path: str) -> int:
+    """Bytes of a parquet table: the file itself, or the data files of
+    a (Spark-written) table directory — ``_SUCCESS``, checksum and other
+    ``_``/``.``-prefixed files are not data."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith(("_", "."))
+    )
 
 
 def read_csv_table(

@@ -36,6 +36,15 @@ def scratch_dir(prefix: str, key: str = "") -> str:
     return _SCRATCH[k]
 
 
+def fresh_scratch_dir(prefix: str, key: str = "") -> str:
+    """:func:`scratch_dir`, emptied first: a query whose scratch layout
+    must start clean on every call (stale epochs or batches from a
+    previous run would otherwise be read back) takes its path here."""
+    path = scratch_dir(prefix, key)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Overwrite-mode CSV directory write with header (S7)."""
     df.write.csv(path, header=True, mode=mode)

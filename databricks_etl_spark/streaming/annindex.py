@@ -18,12 +18,13 @@ streaming append is hash-proven byte-equivalent to rebuilding.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PARTIAL_SCHEMA = "cell_id int, nd long, hd long, __epoch int"
+from databricks_etl_spark.streaming import sinks
+
+_PARTIAL = "cell_id int, nd long, hd long"
+_PARTIAL_SCHEMA = sinks.epoch_schema(_PARTIAL)
 
 
 def make_annindex_epoch(partials_path: str):
@@ -37,15 +38,8 @@ def make_annindex_epoch(partials_path: str):
     )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        part = _q384_manifest(
-            _q384_index(_q384_delta(batch_df)), "nd", "hd"
-        ).withColumn("__epoch", F.lit(int(epoch_id)))
-        (
-            part.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
+        part = _q384_manifest(_q384_index(_q384_delta(batch_df)), "nd", "hd")
+        sinks.land(part, epoch_id, partials_path)
 
     return ingest
 
@@ -65,7 +59,7 @@ def drain_ann_index(
         "vec_id", "embedding"
     )
     man_base = _q384_manifest(_q384_index(base), "nb", "hb")
-    partials = spark.read.schema(_PARTIAL_SCHEMA).parquet(partials_path)
+    partials = sinks.landed(spark, partials_path, _PARTIAL)
     man_delta = partials.groupBy("cell_id").agg(
         F.sum("nd").cast("long").alias("nd"),
         F.sum("hd").cast("long").alias("hd"),
@@ -86,31 +80,19 @@ def run_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the index maintenance end to end with availableNow over
     the embeddings table and return the drained manifest."""
     from databricks_etl_spark.sources.readers import SCHEMAS
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
-    partials_path = scratch_dir("annidx_partials_", key=sf_dir)
-    shutil.rmtree(partials_path, ignore_errors=True)
-    (
-        spark.createDataFrame([], _PARTIAL_SCHEMA)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    partials_path = fresh_scratch_dir("annidx_partials_", key=sf_dir)
+    sinks.seed(spark, partials_path, _PARTIAL)
     emb_stream = (
         spark.readStream.schema(SCHEMAS["embeddings"])
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(sf_dir)
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("embeddings",)):
-        q = (
-            emb_stream.writeStream.foreachBatch(
-                make_annindex_epoch(partials_path)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sinks.run_available_now(
+        emb_stream,
+        make_annindex_epoch(partials_path),
+        sf_dir,
+        ("embeddings",),
+    )
     return drain_ann_index(spark, sf_dir, partials_path)

@@ -20,12 +20,13 @@ extends the engine's streaming surface (SURVEY.md §2.9).
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PARTIAL_SCHEMA = "event_type string, d date, rws long, __epoch int"
+from databricks_etl_spark.streaming import sinks
+
+_PARTIAL = "event_type string, d date, rws long"
+_PARTIAL_SCHEMA = sinks.epoch_schema(_PARTIAL)
 
 
 def make_compaction_epoch(partials_path: str):
@@ -39,14 +40,8 @@ def make_compaction_epoch(partials_path: str):
             )
             .groupBy("event_type", "d")
             .agg(F.count(F.lit(1)).cast("long").alias("rws"))
-            .withColumn("__epoch", F.lit(int(epoch_id)))
         )
-        (
-            part.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
+        sinks.land(part, epoch_id, partials_path)
 
     return ingest
 
@@ -61,7 +56,7 @@ def drain_compaction_plan(
         _split_rollup,
     )
 
-    partials = spark.read.schema(_PARTIAL_SCHEMA).parquet(partials_path)
+    partials = sinks.landed(spark, partials_path, _PARTIAL)
     files = partials.groupBy("event_type", "d").agg(
         F.sum("rws").cast("long").alias("rws")
     )
@@ -73,26 +68,14 @@ def run_streaming_compaction(
 ) -> DataFrame:
     """Drive the plan maintenance end to end with availableNow over
     the events table and return the drained manifest."""
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
     from databricks_etl_spark.streaming.windows import stream_events
 
-    partials_path = scratch_dir("compaction_partials_", key=sf_dir)
-    shutil.rmtree(partials_path, ignore_errors=True)
-    (
-        spark.createDataFrame([], _PARTIAL_SCHEMA)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
+    partials_path = fresh_scratch_dir("compaction_partials_", key=sf_dir)
+    sinks.seed(spark, partials_path, _PARTIAL)
+    sinks.run_available_now(
+        stream_events(spark, sf_dir),
+        make_compaction_epoch(partials_path),
+        sf_dir,
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("events",)):
-        q = (
-            stream_events(spark, sf_dir)
-            .writeStream.foreachBatch(make_compaction_epoch(partials_path))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return drain_compaction_plan(spark, partials_path)

@@ -17,10 +17,10 @@ hash-checks: q336 registers with q319's own oracle SQL.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from databricks_etl_spark.streaming import sinks
 
 
 def make_decontam_epoch(hits_path: str, bench: DataFrame, *, window: int,
@@ -42,13 +42,7 @@ def make_decontam_epoch(hits_path: str, bench: DataFrame, *, window: int,
             chunks, bench, length=length, stride=gram_stride,
             corpus_id="ckey",
         )
-        (
-            hits.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(hits_path)
-        )
+        sinks.land(hits, epoch_id, hits_path)
 
     return ingest
 
@@ -68,18 +62,11 @@ def run_streaming_chunk_decontam(
     (doc_id, chunk_idx, bench_id, n_grams_hit) — byte-equal to the
     batch q319 on any slicing."""
     from databricks_etl_spark.sources.readers import SCHEMAS, read_table
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
-    hits_path = scratch_dir("dc_hits_", key=sf_dir)
-    shutil.rmtree(hits_path, ignore_errors=True)
-    hits_schema = "ckey string, bench_id long, n_grams_hit long, __epoch int"
-    (
-        spark.createDataFrame([], hits_schema)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(hits_path)
-    )
+    hits_path = fresh_scratch_dir("dc_hits_", key=sf_dir)
+    hits_schema = "ckey string, bench_id long, n_grams_hit long"
+    sinks.seed(spark, hits_path, hits_schema)
 
     d = read_table(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 50 == 0).select(
@@ -95,28 +82,23 @@ def run_streaming_chunk_decontam(
         .parquet(sf_dir)
         .filter(F.col("doc_id") % 50 != 0)
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("documents",)):
-        q = (
-            doc_stream.writeStream.foreachBatch(
-                make_decontam_epoch(
-                    hits_path,
-                    bench,
-                    window=window,
-                    stride=stride,
-                    length=length,
-                    gram_stride=gram_stride,
-                )
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sinks.run_available_now(
+        doc_stream,
+        make_decontam_epoch(
+            hits_path,
+            bench,
+            window=window,
+            stride=stride,
+            length=length,
+            gram_stride=gram_stride,
+        ),
+        sf_dir,
+        ("documents",),
+    )
 
     # explicit schema: a clean corpus leaves the sink empty — an
     # all-clear verdict, not an UNABLE_TO_INFER_SCHEMA crash
-    hits = spark.read.schema(hits_schema).parquet(hits_path)
+    hits = sinks.landed(spark, hits_path, hits_schema)
     k = F.split(F.col("ckey"), ":")
     return hits.select(
         k.getItem(0).cast("long").alias("doc_id"),

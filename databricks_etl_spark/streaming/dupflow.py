@@ -24,15 +24,15 @@ hash-checks, because q385 registers with q363's own oracle SQL
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PAIRS_SCHEMA = (
-    "delta_source string, corpus_source string, "
-    "delta_id long, corpus_id long, __epoch int"
+from databricks_etl_spark.streaming import sinks
+
+_PAIRS = (
+    "delta_source string, corpus_source string, delta_id long, corpus_id long"
 )
+_PAIRS_SCHEMA = sinks.epoch_schema(_PAIRS)
 
 
 def build_frozen_index(spark: SparkSession, sf_dir: str):
@@ -126,14 +126,8 @@ def make_dupflow_epoch(pairs_path: str, index) -> "callable":
             "corpus_source",
             "delta_id",
             "corpus_id",
-            F.lit(int(epoch_id)).alias("__epoch"),
         )
-        (
-            pairs.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(pairs_path)
-        )
+        sinks.land(pairs, epoch_id, pairs_path)
 
     return ingest
 
@@ -142,7 +136,7 @@ def drain_dup_flow(spark: SparkSession, pairs_path: str) -> DataFrame:
     """Roll the accumulated pair relation into q363's matrix — the
     distinct counts are exact because the sink holds pairs, not
     partial aggregates."""
-    pairs = spark.read.schema(_PAIRS_SCHEMA).parquet(pairs_path)
+    pairs = sinks.landed(spark, pairs_path, _PAIRS)
     return pairs.groupBy("delta_source", "corpus_source").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.countDistinct("delta_id").cast("long").alias("n_delta_docs"),
@@ -154,32 +148,20 @@ def run_streaming_dup_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the ingest probe end to end with availableNow over the
     documents table and return the drained provenance matrix."""
     from databricks_etl_spark.sources.readers import SCHEMAS
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
-    pairs_path = scratch_dir("dupflow_pairs_", key=sf_dir)
-    shutil.rmtree(pairs_path, ignore_errors=True)
-    (
-        spark.createDataFrame([], _PAIRS_SCHEMA)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(pairs_path)
-    )
+    pairs_path = fresh_scratch_dir("dupflow_pairs_", key=sf_dir)
+    sinks.seed(spark, pairs_path, _PAIRS)
     index = build_frozen_index(spark, sf_dir)
     doc_stream = (
         spark.readStream.schema(SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("documents",)):
-        q = (
-            doc_stream.writeStream.foreachBatch(
-                make_dupflow_epoch(pairs_path, index)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sinks.run_available_now(
+        doc_stream,
+        make_dupflow_epoch(pairs_path, index),
+        sf_dir,
+        ("documents",),
+    )
     return drain_dup_flow(spark, pairs_path)

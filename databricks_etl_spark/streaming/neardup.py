@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databricks_etl_spark.streaming import sinks
+
 
 def make_ingest_epoch(index_path: str, pairs_path: str):
     """``foreachBatch`` handler implementing steps 1–4 above. The index
@@ -58,20 +60,8 @@ def make_ingest_epoch(index_path: str, pairs_path: str):
             .select("doc_id", "band", "band_hash")
         )
         pairs = incremental_band_join(delta_bands, index)
-        (
-            pairs.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(pairs_path)
-        )
-        (
-            delta_bands.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(index_path)
-        )
+        sinks.land(pairs, epoch_id, pairs_path)
+        sinks.land(delta_bands, epoch_id, index_path)
 
     return ingest
 
@@ -90,42 +80,26 @@ def run_streaming_incremental_neardup(
     every candidate pair touching the stream. Returns the materialized
     pairs (without the epoch column — the pair set is epoch-slicing
     invariant, see module docstring)."""
-    import shutil
-
     from databricks_etl_spark.plans.queries_round4 import _band_buckets
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
     from databricks_etl_spark.streaming.windows import stream_documents
 
-    index_path = scratch_dir("nd_index_", key=sf_dir)
-    pairs_path = scratch_dir("nd_pairs_", key=sf_dir)
-    shutil.rmtree(index_path, ignore_errors=True)
-    shutil.rmtree(pairs_path, ignore_errors=True)
-
+    index_path = fresh_scratch_dir("nd_index_", key=sf_dir)
+    pairs_path = fresh_scratch_dir("nd_pairs_", key=sf_dir)
     # seed the index with the existing corpus (epoch -1)
-    corpus_bands = _band_buckets(spark, sf_dir)
-    (
-        corpus_bands.withColumn("__epoch", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(index_path)
-    )
+    sinks.land(_band_buckets(spark, sf_dir), -1, index_path)
 
     batch_stream = (
         stream_documents(spark, sf_dir)
         .filter(F.col("doc_id") % batch_mod == 0)
         .select((F.col("doc_id") + id_offset).alias("doc_id"), "text")
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("documents",)):
-        q = (
-            batch_stream.writeStream.foreachBatch(
-                make_ingest_epoch(index_path, pairs_path)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sinks.run_available_now(
+        batch_stream,
+        make_ingest_epoch(index_path, pairs_path),
+        sf_dir,
+        ("documents",),
+    )
     # Re-derive cross_corpus from ids (corpus ids < id_offset ≤ batch
     # ids, and id_a < id_b): the per-epoch operator flags a pair of two
     # STREAM docs from different epochs as "cross" — correctly, from

@@ -21,12 +21,13 @@ extends the engine's streaming surface (SURVEY.md §2.9/§2.12).
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PARTIAL_SCHEMA = "source string, nd long, ntk long, __epoch int"
+from databricks_etl_spark.streaming import sinks
+
+_PARTIAL = "source string, nd long, ntk long"
+_PARTIAL_SCHEMA = sinks.epoch_schema(_PARTIAL)
 
 
 def make_realize_epoch(
@@ -66,14 +67,8 @@ def make_realize_epoch(
                 F.count(F.lit(1)).cast("long").alias("nd"),
                 F.sum("nt").cast("long").alias("ntk"),
             )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
         )
-        (
-            part.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
+        sinks.land(part, epoch_id, partials_path)
 
     return ingest
 
@@ -85,7 +80,7 @@ def drain_plan_realization(
     plan — q403's report, byte-for-byte (shared ``_q403_report``)."""
     from databricks_etl_spark.plans.queries_round11 import _q403_report
 
-    partials = spark.read.schema(_PARTIAL_SCHEMA).parquet(partials_path)
+    partials = sinks.landed(spark, partials_path, _PARTIAL)
     agg = partials.groupBy("source").agg(
         F.sum("nd").cast("long").alias("realized_docs"),
         F.sum("ntk").cast("long").alias("realized_tokens"),
@@ -100,36 +95,24 @@ def run_streaming_plan_realization(
     documents table and return the drained report."""
     from databricks_etl_spark.plans.queries_round11 import _q403_pool_plan
     from databricks_etl_spark.sources.readers import SCHEMAS
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     shp, pl = _q403_pool_plan(spark, sf_dir)
     pl = pl.localCheckpoint()
     ship_ids = shp.select("doc_id")
     rates = pl.select("source", "rate_ppm")
 
-    partials_path = scratch_dir("planrealize_partials_", key=sf_dir)
-    shutil.rmtree(partials_path, ignore_errors=True)
-    (
-        spark.createDataFrame([], _PARTIAL_SCHEMA)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    partials_path = fresh_scratch_dir("planrealize_partials_", key=sf_dir)
+    sinks.seed(spark, partials_path, _PARTIAL)
     doc_stream = (
         spark.readStream.schema(SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("documents",)):
-        q = (
-            doc_stream.writeStream.foreachBatch(
-                make_realize_epoch(partials_path, ship_ids, rates)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sinks.run_available_now(
+        doc_stream,
+        make_realize_epoch(partials_path, ship_ids, rates),
+        sf_dir,
+        ("documents",),
+    )
     return drain_plan_realization(spark, partials_path, pl)

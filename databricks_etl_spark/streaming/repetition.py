@@ -22,12 +22,13 @@ in memory.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PARTIAL_SCHEMA = "h string, source string, c long, __epoch int"
+from databricks_etl_spark.streaming import sinks
+
+_PARTIAL = "h string, source string, c long"
+_PARTIAL_SCHEMA = sinks.epoch_schema(_PARTIAL)
 
 
 def make_repetition_epoch(partials_path: str):
@@ -39,14 +40,7 @@ def make_repetition_epoch(partials_path: str):
     )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            _q355_shingle_counts(batch_df)
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
+        sinks.land(_q355_shingle_counts(batch_df), epoch_id, partials_path)
 
     return ingest
 
@@ -61,7 +55,7 @@ def drain_repetition_spectrum(
         _q355_spectrum_rollup,
     )
 
-    partials = spark.read.schema(_PARTIAL_SCHEMA).parquet(partials_path)
+    partials = sinks.landed(spark, partials_path, _PARTIAL)
     g = partials.groupBy("h", "source").agg(
         F.sum("c").cast("long").alias("c")
     )
@@ -74,32 +68,20 @@ def run_streaming_repetition_spectrum(
     """Drive the ingest accounting end to end with availableNow over
     the documents table and return the drained spectrum."""
     from databricks_etl_spark.sources.readers import SCHEMAS
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
-    partials_path = scratch_dir("rep_partials_", key=sf_dir)
-    shutil.rmtree(partials_path, ignore_errors=True)
-    (
-        spark.createDataFrame([], _PARTIAL_SCHEMA)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
-    )
+    partials_path = fresh_scratch_dir("rep_partials_", key=sf_dir)
+    sinks.seed(spark, partials_path, _PARTIAL)
 
     doc_stream = (
         spark.readStream.schema(SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("documents",)):
-        q = (
-            doc_stream.writeStream.foreachBatch(
-                make_repetition_epoch(partials_path)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sinks.run_available_now(
+        doc_stream,
+        make_repetition_epoch(partials_path),
+        sf_dir,
+        ("documents",),
+    )
     return drain_repetition_spectrum(spark, partials_path)

@@ -29,6 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databricks_etl_spark.streaming import sinks
+
+_PAIRS = "id_a long, id_b long, s double"
+
 
 def make_semdedup_epoch(
     index_path: str, pairs_path: str, centroids: DataFrame, threshold: float
@@ -92,20 +96,8 @@ def make_semdedup_epoch(
             .filter(F.col("s") >= threshold)
         )
         pairs = cross.unionByName(within)
-        (
-            pairs.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(pairs_path)
-        )
-        (
-            assigned.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(index_path)
-        )
+        sinks.land(pairs, epoch_id, pairs_path)
+        sinks.land(assigned, epoch_id, index_path)
 
     return ingest
 
@@ -129,34 +121,14 @@ def run_streaming_semdedup(
     vectors each see the other regardless of arrival order."""
     from databricks_etl_spark.operators.similarity import assign_cells
     from databricks_etl_spark.sources.readers import SCHEMAS, read_table
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
-    index_path = scratch_dir("sd_index_", key=sf_dir)
-    pairs_path = scratch_dir("sd_pairs_", key=sf_dir)
-
+    # both sinks start empty: a previous run's epochs must not leak in
+    index_path = fresh_scratch_dir("sd_index_", key=sf_dir)
+    pairs_path = fresh_scratch_dir("sd_pairs_", key=sf_dir)
     corpus = read_table(spark, sf_dir, "embeddings")
-    # FULL overwrites clear stale epochs from a previous run —
-    # scratch_dir's contract: reruns REPLACE, callers never rmtree a
-    # path a returned lazy DataFrame may still read. The STATIC mode
-    # is pinned per-write: a session-level dynamic default (a config
-    # this module itself uses for epoch writes) would otherwise turn
-    # these into partition-scoped overwrites that leak stale epochs.
-    (
-        assign_cells(corpus, centroids)
-        .withColumn("__epoch", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(index_path)
-    )
-    pairs_schema = "id_a long, id_b long, s double, __epoch int"
-    (
-        spark.createDataFrame([], pairs_schema)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(pairs_path)
-    )
+    sinks.land(assign_cells(corpus, centroids), -1, index_path)
+    sinks.seed(spark, pairs_path, _PAIRS)
 
     delta_stream = (
         spark.readStream.schema(SCHEMAS["embeddings"])
@@ -168,22 +140,17 @@ def run_streaming_semdedup(
             F.reverse("embedding").alias("embedding"),
         )
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("embeddings",)):
-        q = (
-            delta_stream.writeStream.foreachBatch(
-                make_semdedup_epoch(index_path, pairs_path, centroids, threshold)
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sinks.run_available_now(
+        delta_stream,
+        make_semdedup_epoch(index_path, pairs_path, centroids, threshold),
+        sf_dir,
+        ("embeddings",),
+    )
 
     # explicit schema: a drain where NO epoch found a pair leaves the
     # (pre-created) pairs sink with no parquet parts — an all-novel
     # verdict, not an UNABLE_TO_INFER_SCHEMA crash
-    pairs = spark.read.schema(pairs_schema).parquet(pairs_path)
+    pairs = sinks.landed(spark, pairs_path, _PAIRS)
     # symmetric per-vector aggregate over the invariant pair set:
     # every delta vector counts its pairs in both roles; corpus-side
     # ids (< id_offset) never produce result rows

@@ -17,24 +17,85 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from databricks_etl_spark.streaming.windows import stream_events, stream_shuffle
 
-def epoch_idempotent_sink(path: str) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` function writing each micro-batch to
-    ``path/__epoch=<epoch_id>/`` with dynamic partition overwrite:
+# The epoch-partials layout lives in this module only: every row carries
+# its micro-batch's epoch as the ``__epoch int`` partition column, an
+# epoch write replaces its own partition (dynamic overwrite), and a
+# seed replaces the whole table. Both modes are pinned per write — a
+# session-level default would turn the seed's full overwrite into a
+# partition-scoped one that leaks a previous run's epochs.
+
+
+def epoch_schema(schema: str) -> str:
+    """DDL of the on-disk rows whose payload columns are ``schema``."""
+    return f"{schema}, __epoch int"
+
+
+def land(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Write ``df`` as epoch ``epoch_id`` of the table at ``path``:
     re-delivery of the same epoch replaces, never duplicates. The
     write itself is a normal distributed parquet write (no driver
     collect)."""
+    (
+        df.withColumn("__epoch", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__epoch")
+        .parquet(path)
+    )
+
+
+def seed(spark: SparkSession, path: str, schema: str) -> None:
+    """Create the table at ``path`` empty, with payload ``schema``,
+    replacing whatever a previous run left there."""
+    (
+        spark.createDataFrame([], epoch_schema(schema))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("__epoch")
+        .parquet(path)
+    )
+
+
+def landed(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Every epoch landed at ``path``, typed as payload ``schema`` plus
+    ``__epoch`` (explicit, so a table with no epochs yet reads as
+    empty rather than failing schema inference)."""
+    return spark.read.schema(epoch_schema(schema)).parquet(path)
+
+
+def epoch_idempotent_sink(path: str) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` function landing each micro-batch at ``path``."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(path)
-        )
+        land(batch_df, epoch_id, path)
 
     return write
+
+
+def run_available_now(
+    stream: DataFrame,
+    handler: Callable[[DataFrame, int], None],
+    sf_dir: str,
+    tables: tuple[str, ...] = ("events",),
+    *,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> None:
+    """Drain everything ``stream`` has available now through the
+    ``foreachBatch`` ``handler`` and wait for it, with shuffle
+    partitions sized to ``tables`` under ``sf_dir``
+    (:func:`streaming.windows.stream_shuffle`)."""
+    with stream_shuffle(stream.sparkSession, sf_dir, tables=tables):
+        writer = (
+            stream.writeStream.outputMode(output_mode)
+            .foreachBatch(handler)
+            .trigger(availableNow=True)
+        )
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        writer.start().awaitTermination()
 
 
 def read_latest_per_key(spark: SparkSession, path: str, keys: list[str]) -> DataFrame:
@@ -66,33 +127,21 @@ def run_foreachbatch_counts(
     at-least-once re-delivery after a failure. Idempotence means the
     materialization is unchanged, so the result stays byte-equal to
     the batch aggregate (q131's DuckDB oracle hash-checks this)."""
-    import shutil
-
-    from databricks_etl_spark.sources.writers import scratch_dir
-    from databricks_etl_spark.streaming.windows import (
-        stream_events,
-        stream_shuffle,
-    )
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
 
     # stable per-(process, sf_dir) path, removed at interpreter exit.
     # Dynamic partition overwrite replaces only matching epochs, so a
     # previous run's stale extra epochs must be cleared up front — each
     # call is self-contained (full availableNow drain + optional replay).
-    out = scratch_dir("fbsink_", key=sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
+    out = fresh_scratch_dir("fbsink_", key=sf_dir)
     counts = (
         stream_events(spark, sf_dir)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with stream_shuffle(spark, sf_dir):
-        q = (
-            counts.writeStream.outputMode("update")
-            .foreachBatch(epoch_idempotent_sink(out))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(
+        counts, epoch_idempotent_sink(out), sf_dir, output_mode="update"
+    )
     if replay_last_epoch:
         # the sink's layout contract IS epoch directories — the highest
         # epoch comes from a filesystem listing, not a footer-scan job
@@ -108,5 +157,5 @@ def run_foreachbatch_counts(
             .filter(F.col("__epoch") == last)
             .drop("__epoch")
         )
-        epoch_idempotent_sink(out)(payload, int(last))
+        land(payload, last, out)
     return read_latest_per_key(spark, out, ["user_id"])

@@ -22,14 +22,13 @@ extends the engine's streaming surface (SURVEY.md §2.9).
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PARTIAL_SCHEMA = (
-    "column_name string, n long, nn long, mn double, mx double, __epoch int"
-)
+from databricks_etl_spark.streaming import sinks
+
+_PARTIAL = "column_name string, n long, nn long, mn double, mx double"
+_PARTIAL_SCHEMA = sinks.epoch_schema(_PARTIAL)
 
 # (published column name, the stats expression over the events batch)
 _STAT_COLS: list[tuple[str, str]] = [
@@ -66,13 +65,7 @@ def make_stats_epoch(partials_path: str):
                 F.col(f"{name}__mx").alias("mx"),
             )
             parts = p if parts is None else parts.unionByName(p)
-        (
-            parts.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__epoch")
-            .parquet(partials_path)
-        )
+        sinks.land(parts, epoch_id, partials_path)
 
     return ingest
 
@@ -80,7 +73,7 @@ def make_stats_epoch(partials_path: str):
 def drain_table_stats(spark: SparkSession, partials_path: str) -> DataFrame:
     """Merge the accumulated per-epoch file stats into table stats —
     the associative fold (sum / sum / min / max) per column."""
-    partials = spark.read.schema(_PARTIAL_SCHEMA).parquet(partials_path)
+    partials = sinks.landed(spark, partials_path, _PARTIAL)
     return (
         partials.groupBy("column_name")
         .agg(
@@ -97,26 +90,14 @@ def run_streaming_table_stats(
 ) -> DataFrame:
     """Drive stats maintenance end to end with availableNow over the
     events table and return the drained table stats."""
-    from databricks_etl_spark.sources.writers import scratch_dir
+    from databricks_etl_spark.sources.writers import fresh_scratch_dir
     from databricks_etl_spark.streaming.windows import stream_events
 
-    partials_path = scratch_dir("tablestats_partials_", key=sf_dir)
-    shutil.rmtree(partials_path, ignore_errors=True)
-    (
-        spark.createDataFrame([], _PARTIAL_SCHEMA)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__epoch")
-        .parquet(partials_path)
+    partials_path = fresh_scratch_dir("tablestats_partials_", key=sf_dir)
+    sinks.seed(spark, partials_path, _PARTIAL)
+    sinks.run_available_now(
+        stream_events(spark, sf_dir),
+        make_stats_epoch(partials_path),
+        sf_dir,
     )
-    from databricks_etl_spark.streaming.windows import stream_shuffle
-
-    with stream_shuffle(spark, sf_dir, tables=("events",)):
-        q = (
-            stream_events(spark, sf_dir)
-            .writeStream.foreachBatch(make_stats_epoch(partials_path))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return drain_table_stats(spark, partials_path)

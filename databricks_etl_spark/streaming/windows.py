@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_etl_spark.functions.scalars import decimal_sum
+from databricks_etl_spark.sources.readers import scaled_partitions
 from databricks_etl_spark.sources.schemas import SCHEMAS
 
 
@@ -82,9 +83,6 @@ def session_windows(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
     )
 
 
-_STREAM_BYTES_PER_PARTITION = 8 * 1024 * 1024
-
-
 @contextmanager
 def stream_shuffle(spark: SparkSession, sf_dir: str, tables=("events",)):
     """Scale-adaptive shuffle/state partitioning for a stream drain.
@@ -99,23 +97,8 @@ def stream_shuffle(spark: SparkSession, sf_dir: str, tables=("events",)):
     8 MB of input with a floor of 4 — so large inputs keep the
     cluster-configured value and the change is a no-op at scale.
     Restores the session setting on exit (drains run sequentially)."""
-    import os
-
-    total = 0
-    for t in tables:
-        try:
-            total += os.path.getsize(f"{sf_dir}/{t}.parquet")
-        except OSError:
-            pass
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    n = max(
-        4,
-        min(
-            int(old),
-            (total + _STREAM_BYTES_PER_PARTITION - 1)
-            // _STREAM_BYTES_PER_PARTITION,
-        ),
-    )
+    n = scaled_partitions(spark, sf_dir, tuple(tables), floor=4)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield

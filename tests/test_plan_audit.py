@@ -377,6 +377,33 @@ def test_no_global_ntile_in_plan_sources():
     assert offenders == [], offenders
 
 
+def test_epoch_partials_format_lives_in_sinks_only():
+    """Source tripwire: the epoch-partials layout (the ``__epoch``
+    partition column and its dynamic/static partition overwrite) is
+    known to ``streaming/sinks.py`` alone, and only
+    ``sources/writers.py`` empties a scratch directory — every other
+    module goes through ``sinks.land``/``seed``/``landed`` and
+    ``fresh_scratch_dir`` instead of growing its own copy."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "databricks_etl_spark"
+    epoch_write = re.compile(
+        r"partitionOverwriteMode|partitionBy\(\s*[\"']__epoch[\"']\s*\)"
+    )
+    layout, resets = [], []
+    for p in sorted(pkg.rglob("*.py")):
+        rel, src = p.relative_to(pkg).as_posix(), p.read_text()
+        if rel != "streaming/sinks.py" and epoch_write.search(src):
+            layout.append(rel)
+        if rel != "sources/writers.py" and "scratch_dir" in src and (
+            "rmtree" in src
+        ):
+            resets.append(rel)
+    assert layout == [], layout
+    assert resets == [], resets
+
+
 def test_q470_bit_join_broadcasts_the_filter(spark, smoke_sf_dir):
     """The runtime-filter lane's whole point: the dimension's bit set
     must BROADCAST to the fact side — a shuffle join keyed on bloom

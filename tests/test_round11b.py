@@ -730,8 +730,10 @@ def test_q453_slicing_invariance_and_replay(spark, tmp_path):
     commit's epoch leaves the drain unchanged."""
     from databricks_etl_spark.plans.queries_round11b import (
         _drain_cdc_live,
-        _make_cdc_epoch,
         _version_log,
+    )
+    from databricks_etl_spark.streaming.sinks import (
+        epoch_idempotent_sink as _make_cdc_epoch,
     )
 
     log = _version_log(spark, SMOKE_SF_DIR).localCheckpoint()

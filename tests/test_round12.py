@@ -53,8 +53,10 @@ def test_q463_slicing_invariance_and_replay(spark, tmp_path):
     drain unchanged (the sink is epoch-idempotent)."""
     from databricks_etl_spark.plans.queries_round12 import (
         _drain_q463_asof,
-        _make_q463_epoch,
         _version_log,
+    )
+    from databricks_etl_spark.streaming.sinks import (
+        epoch_idempotent_sink as _make_q463_epoch,
     )
 
     log = _version_log(spark, SMOKE_SF_DIR).localCheckpoint()

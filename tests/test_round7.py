@@ -111,6 +111,20 @@ def test_semdedup_cell_top_priority_never_pruned(spark):
     assert top.filter(F.col("surv").isNull()).count() == 0
 
 
+def test_semdedup_declared_dim_rejects_wider_vector(spark):
+    """A declared ``dim`` is a contract on every vector: one planted
+    vector of dim+1 elements fails the query instead of being cut to
+    its first ``dim`` elements by the flat pair dot."""
+    vecs, quality, cents = _clone_corpus(spark)
+    wide = spark.createDataFrame(
+        [(99, [1.0, 0.0, 0.0, 0.0, 0.5])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="has 5 elements, dim=4 was declared"):
+        semdedup_prune(
+            vecs.unionByName(wide), cents, quality, 0.95, dim=4
+        ).collect()
+
+
 @pytest.mark.slow
 def test_semdedup_scale_gate_8x(spark, sf_dir):
     """8× duplicated corpus through the q285 body: completes with one

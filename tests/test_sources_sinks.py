@@ -308,3 +308,29 @@ def test_jdbc_partitioned_read_derby(spark, smoke_sf_dir):
     filtered = back.filter(F.col("o_custkey") == 1)
     plan = filtered._jdf.queryExecution().toString()
     assert "PushedFilters" in plan and "o_custkey" in plan.split("PushedFilters")[1][:200]
+
+
+def test_scaled_partitions_sizes_parquet_directory_by_its_files(spark, tmp_path):
+    """A Spark-written table directory is sized by its data files, not
+    by the directory inode (a few KB, which pinned every count to the
+    floor): the same bytes as a directory and as one file give one
+    partition count."""
+    from databricks_etl_spark.sources.readers import scaled_partitions
+
+    table_dir = tmp_path / "as_dir.parquet"
+    spark.range(20000).selectExpr(
+        "id", "sha2(CAST(id AS STRING), 256) AS h"
+    ).repartition(3).write.parquet(str(table_dir))
+    data = b"".join(p.read_bytes() for p in sorted(table_dir.glob("part-*")))
+    (tmp_path / "as_file.parquet").write_bytes(data)
+
+    # scale the data bytes to 2.5 partitions' worth: ceil-div asks for 3
+    fraction = 2.5 * 8 * 1024 * 1024 / len(data)
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    counts = [
+        scaled_partitions(
+            spark, str(tmp_path), (t,), fraction=fraction, floor=1
+        )
+        for t in ("as_dir", "as_file")
+    ]
+    assert counts == [min(3, session)] * 2
