@@ -79,6 +79,8 @@ _loaded = False
 # _DRIVER_VERIFIED below) so "same tree => same tiered-parity sample"
 # holds on a fresh clone regardless of which artifacts are on disk
 # (VERDICT r15 "What's wrong" #2).
+# r17 was folded without a round bump (_FOLDED_THIS_ROUND), so the
+# iteration sample keeps its round-17 draw.
 BUILD_ROUND = 17
 
 # Queries with a green (rows+schema+hash) row in any CORRECTNESS_r0N
@@ -792,6 +794,36 @@ _DRIVER_VERIFIED: frozenset[str] = frozenset(
         "q675_streaming_jarque_bera",
     }
 )
+
+# --- round 17 greens (CORRECTNESS_r17.json; every oracled row green —
+# q01 plus 21 re-proven lanes and the round-17 window q676-q693; the 10
+# no_oracle rows stay out).  Folded without a BUILD_ROUND bump, so the
+# tiered parity sample keeps the draw the round opened with: these lanes
+# leave the driver window now but keep running in the iteration gate
+# until the next bump moves them into the set above.
+_FOLDED_THIS_ROUND: frozenset[str] = frozenset(
+    {
+        "q676_streaming_brown_forsythe",
+        "q677_ks_two_sample",
+        "q678_friedman_test",
+        "q679_cochran_q",
+        "q680_psi_stability",
+        "q681_streaming_ks_two_sample",
+        "q682_streaming_friedman",
+        "q683_streaming_cochran_q",
+        "q684_streaming_psi",
+        "q685_expected_calibration_error",
+        "q686_gains_table",
+        "q687_rmst",
+        "q688_turning_points",
+        "q689_runs_test",
+        "q690_grubbs_screen",
+        "q691_srm_guardrail",
+        "q692_streaming_turning_points",
+        "q693_streaming_runs_test",
+    }
+)
+_DRIVER_VERIFIED |= _FOLDED_THIS_ROUND
 
 
 def _reorder() -> None:

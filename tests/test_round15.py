@@ -124,9 +124,14 @@ def test_q613_correlation_bounds(spark, smoke_sf_dir):
 
 
 def test_q614_acf_bounds_and_pair_counts(spark, smoke_sf_dir):
-    """|r_k| ≤ 1 and each lag loses exactly k pairs off the series."""
-    rows = queries()["q614_acf_lags"](spark, smoke_sf_dir).collect()
-    assert len(rows) == 7
+    """|r_k| ≤ 1 and each lag loses exactly k pairs off the series.
+    The lane promises no row order (it ends in an unordered groupBy),
+    so rows are keyed by lag before n is read off lag 1."""
+    rows = sorted(
+        queries()["q614_acf_lags"](spark, smoke_sf_dir).collect(),
+        key=lambda r: r["lag"],
+    )
+    assert [r["lag"] for r in rows] == list(range(1, 8))
     n0 = rows[0]["n_pairs"] + 1
     for r in rows:
         assert abs(r["acf"]) <= 1.0
